@@ -1,7 +1,7 @@
 package graft.retrieval
 
 import graft.functions.{Hashing, TextAnalysis}
-import graft.sources.Layout
+import graft.sources.{IndexLifecycle, Layout}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -314,7 +314,7 @@ object Postings {
         count(lit(1)).as("n_docs"),
         sum(graft.functions.TextAnalysis.tokenCount(col(textCol))).as("sum_dl")))
     if (!spark.table(table).columns.contains("pb")) {
-      graft.sources.IndexLifecycle.appendTombs(observed, idCol, table, "doc_id", batchId)
+      IndexLifecycle.appendTombs(observed, idCol, table, "doc_id", batchId)
       return
     }
     def maskFor(t: String): Column =
@@ -370,7 +370,7 @@ object Postings {
     // would hide it while its stats row counts it, silently drifting
     // every idf and length norm. Compaction clears the set and
     // re-opens the id.
-    graft.sources.IndexLifecycle.requireNotTombstoned(
+    IndexLifecycle.requireNotTombstoned(
       spark, tombsTableName(name), "doc_id",
       docs.filter(col(textCol).isNotNull), idCol, s"appendBatch($name)")
     // an EMPTY batch — zero rows or all-null text — appends nothing
@@ -503,8 +503,8 @@ object Postings {
           require(
             spark.catalog.tableExists(posMarkersTableName(name)),
             s"positional-only index $name has no marker log — rebuild with writePositionalIndex before idempotent deletes")
-          graft.sources.IndexLifecycle.markerPresent(
-            spark, posMarkersTableName(name), batchId, graft.sources.IndexLifecycle.Delete)
+          IndexLifecycle.markerPresent(
+            spark, posMarkersTableName(name), batchId, IndexLifecycle.Delete)
         }
       if (replayed) return false
     }
@@ -515,7 +515,7 @@ object Postings {
     // and refuse below. Torn-replay semantics (exclude my own prior
     // tombstones) exist only for marker-tagged (batchId >= 0) batches,
     // whose ids are unique by the marker-log contract.
-    graft.sources.IndexLifecycle.requireNotTombstoned(
+    IndexLifecycle.requireNotTombstoned(
       spark, tombsTableName(name), "doc_id",
       docs.filter(col(textCol).isNotNull), idCol, s"deleteBatch($name)",
       excludeBatchId = if (batchId >= 0L) Some(batchId) else None)
@@ -550,8 +550,8 @@ object Postings {
       // marker LAST, in the delete kind space of the (uncompacted)
       // positional marker log
       if (batchId >= 0L)
-        graft.sources.IndexLifecycle.writeMarker(
-          spark, posMarkersTableName(name), batchId, graft.sources.IndexLifecycle.Delete)
+        IndexLifecycle.writeMarker(
+          spark, posMarkersTableName(name), batchId, IndexLifecycle.Delete)
       true
     }
   }
@@ -570,7 +570,7 @@ object Postings {
     * properties post-delete are spec-pinned in RetrievalSpec).
     */
   private def notTombstoned(spark: SparkSession, name: String, df: DataFrame): DataFrame =
-    graft.sources.IndexLifecycle.liveView(spark, tombsTableName(name), "doc_id", df, "doc_id")
+    IndexLifecycle.liveView(spark, tombsTableName(name), "doc_id", df, "doc_id")
 
   /** The postings/positional/forward tables with tombstoned docs
     * filtered out — what every query path should read.
@@ -582,661 +582,225 @@ object Postings {
   def liveForward(spark: SparkSession, name: String): DataFrame =
     notTombstoned(spark, name, forwardTable(spark, name))
 
-  /** Maintain the index from a DELETION stream — the redaction/
-    * contamination-removal side of `maintainFromStream`: each
-    * micro-batch of doc rows tombstones its ids and appends the
-    * negative stats partial (`deleteBatch`), idempotent under
-    * foreachBatch's at-least-once replay via the sign-separated
-    * marker space, so an append stream and a delete stream can
-    * maintain the same index concurrently with independent batch
-    * ids. Owner-session catalog refreshed per batch (the
-    * cloned-session coherence rule).
+  /** Maintain the index from a DELETION stream (redaction,
+    * contamination removal): each micro-batch is an idempotent
+    * `deleteBatch`, so an append stream and a delete stream can
+    * maintain the same index concurrently with independent batch ids.
     */
   def maintainDeletesFromStream(
       docs: DataFrame,
       idCol: String,
       textCol: String,
-      name: String): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    val owner = docs.sparkSession
-    docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // refresh ONLY after a batch that wrote (r18): a replayed or
-        // empty micro-batch mutates nothing, so the owner's cached
-        // relations are already current — N table refreshes (and the
-        // re-listings they force on the owner's next read) for a
-        // no-op batch were pure fixed cost
-        if (deleteBatch(batch, idCol, textCol, name, batchId))
-          Seq(tombsTableName(name), statsTableName(name), posMarkersTableName(name))
-            .filter(owner.catalog.tableExists)
-            .foreach(owner.catalog.refreshTable)
-      }
-  }
+      name: String): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+    IndexLifecycle.foreachBatch(
+      docs, Seq(tombsTableName(name), statsTableName(name), posMarkersTableName(name)))(
+      (batch, batchId) => deleteBatch(batch, idCol, textCol, name, batchId))
 
-  /** Maintain the index from a stream: each micro-batch appends its
-    * postings + one batch-tagged partial stats row (idempotent under
-    * foreachBatch's at-least-once replay — see `appendBatch`). The
-    * index stays query-consistent at every micro-batch boundary:
-    * RetrievalSpec/StreamingSpec assert the grown index answers
-    * exactly like a from-scratch build over the same docs.
+  /** Maintain the index from a stream: each micro-batch is an
+    * idempotent `appendBatch` (postings + one batch-tagged partial
+    * stats row). The index stays query-consistent at every micro-batch
+    * boundary: RetrievalSpec/StreamingSpec assert the grown index
+    * answers exactly like a from-scratch build over the same docs.
     */
   def maintainFromStream(
       docs: DataFrame,
       idCol: String,
       textCol: String,
-      name: String): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    // foreachBatch executes in a CLONED SparkSession; insertInto
-    // refreshes the clone's relation cache but not the owning
-    // session's. Capture the owner here and refresh its view of the
-    // index tables after each committed batch, so queries in the
-    // session that set up the maintenance always see the grown index.
-    // (Other unrelated sessions follow the standard Spark rule:
-    // REFRESH TABLE after an external writer.)
-    val owner = docs.sparkSession
-    docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // forward table only when the index was built with metaCols
-        // (refreshTable on a missing table throws); refresh ONLY
-        // after a batch that wrote (r18) — a replayed/empty batch
-        // changed nothing, so the refreshes (and the re-listings
-        // they force) would be pure fixed cost per micro-batch
-        if (appendBatch(batch, idCol, textCol, name, batchId))
-          Seq(postingsTableName(name), statsTableName(name), dictTableName(name),
-            forwardTableName(name))
-            .filter(owner.catalog.tableExists)
-            .foreach(owner.catalog.refreshTable)
-      }
-  }
+      name: String): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+    IndexLifecycle.foreachBatch(
+      docs,
+      Seq(postingsTableName(name), statsTableName(name), dictTableName(name), forwardTableName(name)))(
+      (batch, batchId) => appendBatch(batch, idCol, textCol, name, batchId))
 
   def postingsTable(spark: SparkSession, name: String): DataFrame =
     spark.table(postingsTableName(name))
   def statsTable(spark: SparkSession, name: String): DataFrame =
     spark.table(statsTableName(name))
 
-  /** Compact the index after many incremental appends — the
-    * maintenance pass that keeps a long-lived, stream-grown index
-    * reading like a fresh build:
+  /** The posting index's layout for the shared maintenance ops:
+    * postings and positional tables bucketed by term hash (a doc's rows
+    * span its terms' buckets; delete-time masks `pb`/`xb`), the forward
+    * table bucketed by doc id, the stats table and positional marker
+    * log as commit logs, the dictionary as the side table its own hooks
+    * keep exact (`DictCredit`). Live count: the summed stats (exact,
+    * no scan), or the distinct live docs of a stats-less index.
+    */
+  private def layout(name: String): IndexLifecycle.IndexLayout =
+    IndexLifecycle.IndexLayout(
+      tombs = tombsTableName(name),
+      tombId = "doc_id",
+      bucketed = Seq(
+        IndexLifecycle.BucketedTable(postingsTableName(name), "term_h", "doc_id", Some("pb")),
+        IndexLifecycle.BucketedTable(posTableName(name), "term_h", "doc_id", Some("xb")),
+        IndexLifecycle.BucketedTable(forwardTableName(name), "doc_id", "doc_id")),
+      plain = Seq(statsTableName(name), posMarkersTableName(name)),
+      side = Seq(dictTableName(name)),
+      liveCount = spark =>
+        if (spark.catalog.tableExists(statsTableName(name)))
+          statsTable(spark, name).agg(sum(col("n_docs"))).head().getLong(0)
+        else livePostings(spark, name).select(col("doc_id")).distinct().count(),
+      hooks = new DictCredit(name))
+
+  /** Dictionary exactness around the shared rewrites. Per-batch dict
+    * partials overcount df between a delete and the rewrite that drops
+    * its postings (documented-safe: stop-term screening is policy, and
+    * an over-resolved prefix/fuzzy term contributes an exact 0.0);
+    * these hooks restore exactness where the rows physically go:
     *
-    *  - **postings** (and the positional table, when built) go through
-    *    `Layout.compact`: back to one file per bucket, per-bucket sort
-    *    restored. Appends leave K+1 file fragments per bucket whose
-    *    per-FILE sort defeats row-group pruning and whose open/footer
-    *    cost grows with K; compaction resets both while preserving the
-    *    bucket spec, so every zero-shuffle-join and bucket-pruning
-    *    plan property of the original build still holds (spec-pinned).
-    *  - **dictionary** is RECOUNTED from the compacted (surviving)
-    *    postings — the same fold a fresh build runs — into one row per
-    *    term, written globally sorted by `term` so prefix resolution
-    *    prunes row groups by min/max term range. Recounting (rather
-    *    than merging the per-batch partials, the pre-r13 form) is what
-    *    restores exact df after deletions: between a delete and its
-    *    compaction the partials overcount, which is documented-safe
-    *    (stop-term screening is policy; over-resolved prefix/fuzzy
-    *    terms contribute an exact 0.0). With no deletions the recount
-    *    equals the merge.
-    *  - **stats** (and the positional marker log) keep EVERY ROW:
-    *    each is an append/delete-idempotence commit marker
-    *    (`appendBatch`/`appendPositionalBatch`); collapsing rows would
-    *    let a replayed batch id re-apply after compaction. Their FILES
-    *    do coalesce (round 15, `Layout.coalescePlain`): every batch
-    *    appended its own one-row file, so a long-streamed index would
-    *    otherwise open one file per batch on every stats read — the
-    *    rows-preserving rewrite keeps replay semantics bit-identical
-    *    while resetting the open/footer cost.
-    *
-    * Same swap discipline as `Layout.compact` (write next generation,
-    * re-point, delete old; other sessions REFRESH TABLE).
+    *  - a bucket-scoped rewrite of the postings table is CREDITED: the
+    *    per-term counts of the tombstoned rows it drops are staged
+    *    before and applied as negative partials after it commits
+    *    (`stageDictDeltas`/`applyDictDeltas`), at touched-bucket cost,
+    *    every crash window degrading to the conservative overcount;
+    *  - retirement resolves a stale staging BEFORE the set clears,
+    *    while the tombstone evidence its verification needs still
+    *    exists;
+    *  - a full rewrite RECOUNTS the dictionary from the rewritten
+    *    postings (the fold a fresh build runs), superseding any staged
+    *    credit.
+    */
+  private final class DictCredit(name: String) extends IndexLifecycle.KindHooks {
+
+    override def aroundBucketRewrite(
+        spark: SparkSession,
+        table: String,
+        buckets: Set[Int],
+        ids: DataFrame)(rewrite: => Unit): Unit =
+      if (table != postingsTableName(name)) rewrite
+      else {
+        // ONE physical read of the touched buckets serves both the
+        // staging's semi-join and the rewrite's anti-join: the raw
+        // touched-files frame is persisted, and the identical file-list
+        // reads inside stageDictDeltas and compactBuckets hit the cache
+        // by normalized-plan equality (a miss only costs a second read)
+        val files = Layout.bucketFiles(spark, table, buckets)
+        val raw =
+          if (files.isEmpty) None
+          else {
+            val meta = spark.sessionState.catalog.getTableMetadata(
+              spark.sessionState.sqlParser.parseTableIdentifier(table))
+            Some(spark.read.schema(meta.schema).parquet(files: _*)
+              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          }
+        try {
+          val staged = stageDictDeltas(spark, name, buckets, ids)
+          rewrite
+          if (staged) applyDictDeltas(spark, name)
+        } finally raw.foreach(_.unpersist())
+      }
+
+    // a staging can survive retirement untouched when the trace found
+    // no evidence (a committed rewrite dropped the rows before their
+    // credit applied): one that verifies against its own bucket set
+    // applies (the exact heal); anything else was condemned
+    override def beforeClear(spark: SparkSession, ids: DataFrame): Unit =
+      if (spark.catalog.tableExists(dictTableName(name)) &&
+        resolvableStaleStaging(spark, name, ids))
+        applyDictDeltas(spark, name)
+
+    override def afterFullRewrite(spark: SparkSession): Unit =
+      if (spark.catalog.tableExists(dictTableName(name))) {
+        val postMeta = spark.sessionState.catalog.getTableMetadata(
+          spark.sessionState.sqlParser.parseTableIdentifier(postingsTableName(name)))
+        rewriteDict(spark, name, spark.read.schema(postMeta.schema).parquet(postMeta.location.toString))
+      }
+  }
+
+  /** Full compaction: postings (and positional, forward) back to one
+    * file per bucket with the per-bucket sort restored — appends leave
+    * K+1 fragments per bucket whose per-FILE sort defeats row-group
+    * pruning — while every zero-shuffle-join and bucket-pruning plan
+    * property of the original build still holds (spec-pinned);
+    * tombstoned docs dropped, the dictionary recounted, commit-log
+    * files coalesced. See `IndexLifecycle.compact`.
     */
   def compactIndex(spark: SparkSession, name: String): Unit =
-    bucketSpecIncoherence(spark, name) match {
-      // a half-migrated index (crash between rebucketIndex's sequential
-      // table swaps) must not be PRESERVED by a plain compaction (each
-      // table would re-compact at its own mixed count, silently keeping
-      // the stale parallelism forever — VERDICT r16 #2): resume the
-      // migration instead, which IS a full compaction at the target
-      case Some(target) => compactIndexTo(spark, name, Some(target))
-      case None         => compactIndexTo(spark, name, None)
-    }
+    IndexLifecycle.compact(spark, layout(name))
 
-  /** Bucket counts of the index's bucketed tables when they DISAGREE —
-    * the signature of a crash between `compactIndexTo`'s sequential
-    * table swaps (postings → positional → forward). Answers stay
-    * correct in that state (each table's masks and maintenance key off
-    * its own current count, and the tombstone set only clears after
-    * ALL swaps), but the unswapped tables keep the old parallelism and
-    * per-bucket cost profile forever unless someone notices — this is
-    * the free metadata probe that notices. The target is the POSTINGS
-    * count: it is always the first table swapped, so a torn migration
-    * leaves it at the new count.
-    */
-  private def bucketSpecIncoherence(spark: SparkSession, name: String): Option[Int] = {
-    val counts = Seq(postingsTableName(name), posTableName(name), forwardTableName(name))
-      .filter(spark.catalog.tableExists)
-      .map(t => t -> Layout.numBuckets(spark, t))
-    if (counts.map(_._2).distinct.size <= 1) None
-    else counts.collectFirst { case (t, n) if t == postingsTableName(name) => n }
-      .orElse(counts.headOption.map(_._2))
-  }
-
-  /** Auto-resume of a torn bucket-count migration (VERDICT r16 #2) —
-    * the `recoverBucketCompact` analogue one level up: when the probe
-    * finds mixed bucket counts, re-run the migration to the postings
-    * count. The re-run is the full `rebucketIndex` (idempotent: a
-    * table already at the target is rewritten once more), NOT a
-    * swap-only patch of the lagging tables — deletes that landed
-    * BETWEEN the crash and the resume must still drop physically from
-    * every table before the tombstone set clears, and only the full
-    * pass proves that. Called from every maintenance entry point; the
-    * no-migration probe is one metadata read per table.
+  /** Resume a torn bucket-count migration; see
+    * `IndexLifecycle.resumeRebucketIfIncoherent`.
     */
   def resumeRebucketIfIncoherent(spark: SparkSession, name: String): Option[Int] =
-    bucketSpecIncoherence(spark, name).map { target =>
-      rebucketIndex(spark, name, target)
-      target
-    }
+    IndexLifecycle.resumeRebucketIfIncoherent(spark, layout(name))
 
-  /** BUCKET-COUNT migration (round 16 — VERDICT r15 #2, the last
-    * index-sized scale seam): rewrite every bucketed table of the
-    * index under `newBuckets`, as one generation swap per table — the
-    * posting-side twin of `retrainIvfIndex`'s model migration. The
-    * bucket count is frozen at `writeIndex` time; a corpus that grows
-    * 100× after creation keeps its original 16-32 buckets, so
-    * per-bucket files grow unbounded, `compactBuckets`' marginal cost
-    * degrades from touched-bytes toward corpus-sized (one bucket =
-    * 1/N of 100 TB), and bucketed-scan parallelism caps at the stale
-    * count. Re-bucketing restores all three, and the result is
-    * IDENTICAL to a fresh `writeIndex` of the survivors at the new
-    * count (spec-pinned in RetrievalSpec; the d75 gate answers d64's
-    * survivor oracle verbatim after a 16→64 migration):
-    *
-    *  - tombstoned rows drop physically (the rewrite reads every byte
-    *    anyway) and the set clears LAST — which also retires any
-    *    delete-time `pb`/`xb` bucket masks computed under the OLD
-    *    modulus (a mask written under a different bucket count would
-    *    otherwise mislead retirement; the out-of-range distrust
-    *    check only catches masks outside the new range);
-    *  - the dictionary is recounted from the survivor postings (dict
-    *    exactness restored for free, like `compactIndex`);
-    *  - stats rows and marker logs keep EVERY ROW (replay markers —
-    *    a replayed batch id stays a no-op across the migration), but
-    *    their files coalesce.
-    * Single-writer maintenance, like every compaction entry point.
+  /** BUCKET-COUNT migration of every bucketed table to `newBuckets`.
+    * The bucket count is frozen at `writeIndex` time; a corpus that
+    * grows 100× keeps its original buckets, so per-bucket files grow
+    * unbounded and bucket-scoped maintenance degrades toward
+    * corpus-sized. The result is IDENTICAL to a fresh `writeIndex` of
+    * the survivors at the new count (spec-pinned; the d75 gate answers
+    * d64's survivor oracle after a 16→64 migration). Single-writer
+    * maintenance. See `IndexLifecycle.rebucket`.
     */
-  def rebucketIndex(spark: SparkSession, name: String, newBuckets: Int): Unit = {
-    require(newBuckets >= 1, "newBuckets must be >= 1")
-    compactIndexTo(spark, name, Some(newBuckets))
-  }
+  def rebucketIndex(spark: SparkSession, name: String, newBuckets: Int): Unit =
+    IndexLifecycle.rebucket(spark, layout(name), newBuckets)
 
-  /** Bucket-count GROWTH POLICY — the scheduler-facing form of
-    * `rebucketIndex`, so an operator doesn't have to notice the corpus
-    * outgrew its build-time spec: a METADATA probe (postings parquet
-    * bytes / bucket count — one directory listing, no job) against
-    * `maxBytesPerBucket`; above it, migrate to the smallest
-    * `growthFactor`-power multiple that brings the ratio back under —
-    * one call heals even a long-neglected index. Returns the new
-    * bucket count when a migration ran. Like every compaction entry
-    * point this is a single-writer maintenance operation, and like
-    * `compactIfFragmented` it is a POLICY: the probe is free, so call
-    * it every maintenance window. (Deliberately NOT folded into
-    * `maintainIncremental`: a bucket migration is a generation rewrite
-    * of every index table — an operator-visible event with a cost
-    * profile the incremental policy exists to avoid — so it triggers
-    * from its own explicitly-chosen bound.)
-    */
+  /** Bucket-count growth policy; see `IndexLifecycle.rebucketIfOvergrown`. */
   def rebucketIfOvergrown(
       spark: SparkSession,
       name: String,
       maxBytesPerBucket: Long,
-      growthFactor: Int = 4): Option[Int] = {
-    require(maxBytesPerBucket >= 1L, "maxBytesPerBucket must be >= 1")
-    require(growthFactor >= 2, "growthFactor must be >= 2")
-    val table = postingsTableName(name)
-    if (!spark.catalog.tableExists(table)) return None
-    // a torn previous migration resumes FIRST (free probe) — otherwise
-    // the bytes/bucket ratio below is measured against a bucket count
-    // half the index doesn't have
-    val resumed = resumeRebucketIfIncoherent(spark, name)
-    val nb    = Layout.numBuckets(spark, table)
-    val bytes = Layout.parquetBytes(spark, table)
-    if (bytes <= maxBytesPerBucket * nb.toLong) resumed
-    else {
-      val n = Layout.grownBucketCount(nb, bytes, maxBytesPerBucket, growthFactor)
-      rebucketIndex(spark, name, n)
-      Some(n)
-    }
-  }
+      growthFactor: Int = 4): Option[Int] =
+    IndexLifecycle.rebucketIfOvergrown(spark, layout(name), maxBytesPerBucket, growthFactor)
 
-  /** Two-sided bucket-count policy (round 17 — closing the r16 "only
-    * migrates UP" note): the growth side is `rebucketIfOvergrown`
-    * verbatim; the SHRINK side fires when a corpus that contracted
-    * after mass deletion leaves per-bucket bytes under
-    * `minBytesPerBucket` — every bucketed read then opens many
-    * near-empty files and scan tasks under-fill. Shrinks by
-    * `growthFactor` divisions, never below `minBuckets`, and never
-    * past the grow bound (so the two sides cannot oscillate no matter
-    * how the bounds are chosen; a sane pairing keeps
-    * `minBytesPerBucket ≤ maxBytesPerBucket / growthFactor²` for
-    * hysteresis). Same free metadata probe; returns the new count
-    * when a migration ran.
-    */
+  /** Two-sided bucket-count policy; see `IndexLifecycle.rebucketIfMisSized`. */
   def rebucketIfMisSized(
       spark: SparkSession,
       name: String,
       maxBytesPerBucket: Long,
       minBytesPerBucket: Long,
       growthFactor: Int = 4,
-      minBuckets: Int = 8): Option[Int] = {
-    require(minBytesPerBucket >= 0L, "minBytesPerBucket must be >= 0")
-    require(minBuckets >= 1, "minBuckets must be >= 1")
-    rebucketIfOvergrown(spark, name, maxBytesPerBucket, growthFactor).orElse {
-      val table = postingsTableName(name)
-      if (!spark.catalog.tableExists(table) || minBytesPerBucket == 0L) None
-      else {
-        val nb    = Layout.numBuckets(spark, table)
-        val bytes = Layout.parquetBytes(spark, table)
-        val n = Layout.shrunkenBucketCount(
-          nb, bytes, minBytesPerBucket, maxBytesPerBucket, growthFactor, minBuckets)
-        if (n == nb) None
-        else {
-          rebucketIndex(spark, name, n)
-          Some(n)
-        }
-      }
-    }
-  }
+      minBuckets: Int = 8): Option[Int] =
+    IndexLifecycle.rebucketIfMisSized(
+      spark, layout(name), maxBytesPerBucket, minBytesPerBucket, growthFactor, minBuckets)
 
-  private def compactIndexTo(spark: SparkSession, name: String, newBuckets: Option[Int]): Unit = {
-    // tombstone-drop rides the generation rewrite the compaction was
-    // doing anyway: physical deletion costs zero extra passes. The
-    // set is read ONCE here (slim by the compaction-cadence contract)
-    // and anti-joined inside each table's rewrite (column order
-    // restored — the rewrite is positional).
-    val tombsLive = graft.sources.IndexLifecycle.tombsLive(spark, tombsTableName(name))
-    val dropTombstoned: DataFrame => DataFrame =
-      if (!tombsLive) identity
-      else
-        graft.sources.IndexLifecycle.dropTombstonedTransform(
-          spark, tombsTableName(name), "doc_id", "doc_id")
-    def rewrite(table: String): Unit = newBuckets match {
-      case Some(n) => Layout.rebucket(spark, table, n, dropTombstoned)
-      case None    => Layout.compact(spark, table, dropTombstoned)
-    }
-    if (spark.catalog.tableExists(postingsTableName(name)))
-      rewrite(postingsTableName(name))
-    if (spark.catalog.tableExists(posTableName(name)))
-      rewrite(posTableName(name))
-    if (spark.catalog.tableExists(forwardTableName(name)))
-      rewrite(forwardTableName(name))
-    if (spark.catalog.tableExists(dictTableName(name))) {
-      // the dictionary is RECOUNTED from the compacted postings (the
-      // same fold a fresh build runs) rather than merged from its own
-      // partials: after deletions the partials overcount df (they are
-      // documented as approximate between delete and compaction — the
-      // stop-term screen is policy, prefix/fuzzy resolution only
-      // over-resolves, and a resolved term with zero live postings
-      // contributes an exact 0.0) — compaction is where the exact
-      // per-term df is restored. Sorted by term so prefix resolution
-      // prunes row groups by min/max term range, as before.
-      Layout.recoverDanglingSwap(spark, dictTableName(name))
-      val table = dictTableName(name)
-      val meta = spark.sessionState.catalog.getTableMetadata(
-        spark.sessionState.sqlParser.parseTableIdentifier(table))
-      val postMeta = spark.sessionState.catalog.getTableMetadata(
-        spark.sessionState.sqlParser.parseTableIdentifier(postingsTableName(name)))
-      val recounted = spark.read.schema(postMeta.schema).parquet(postMeta.location.toString)
-        .groupBy(col("term_h"), col("term")).agg(count(lit(1)).as("df"))
-        .sort(col("term"))
-      Layout.swapGeneration(spark, table, meta) { (scratch, newDir) =>
-        recounted.write.mode("overwrite").option("path", newDir).saveAsTable(scratch)
-      }
-      // the recount supersedes any pending staged credit — a stale
-      // decrement applied later would UNDERCOUNT the fresh exact df
-      condemnDictDeltas(spark, name)
-    }
-    // the marker tables' FILES coalesce (rows preserved — every row is
-    // a replay marker, so the row set is untouchable, but each batch
-    // appended its own one-row file and a streamed index accumulates
-    // one file per batch forever; see Layout.coalescePlain)
-    if (spark.catalog.tableExists(statsTableName(name)))
-      Layout.coalescePlain(spark, statsTableName(name))
-    if (spark.catalog.tableExists(posMarkersTableName(name)))
-      Layout.coalescePlain(spark, posMarkersTableName(name))
-    if (tombsLive)
-      // the dropped docs are physically gone from every table — clear
-      // the set (LAST, so a crash anywhere above leaves the tombstones
-      // live and the reads still correct). Replayed delete batches
-      // stay no-ops: their markers live in the UNcompacted stats rows
-      // (or, positional-only, the uncompacted marker log).
-      graft.sources.IndexLifecycle.clearTombs(spark, tombsTableName(name), "doc_id")
-  }
-
-  /** Compaction POLICY: compact the index only when fragmentation has
-    * actually accumulated — the helper a maintenance scheduler calls
-    * after every ingest window without tracking append counts itself.
-    * Fragmentation is measured directly from the layout (max parquet
-    * files per bucket across the index's bucketed tables; appends add
-    * one file set per batch, so this is ~the append count since the
-    * last compaction); at or below `maxFilesPerBucket` the call is a
-    * no-op, above it it runs the full `compactIndex` swap. Returns
-    * whether a compaction ran, so callers can log/alert on cadence.
+  /** Compaction policy on fragmentation alone; see
+    * `IndexLifecycle.compactIfFragmented`.
     */
   def compactIfFragmented(spark: SparkSession, name: String, maxFilesPerBucket: Int): Boolean =
     compactIfFragmented(spark, name, maxFilesPerBucket, Long.MaxValue)
 
-  /** Policy form with a TOMBSTONE-pressure trigger: deletes accumulate
-    * read-side cost (every query anti-joins the set, which must stay
-    * broadcast-sized) and dead bytes; above `maxTombstones` distinct
-    * deleted docs the policy compacts even with no fragmentation, which
-    * physically drops them and clears the set. This is where the
-    * "tombstone set is slim by contract" guarantee is actually
-    * enforced, not just documented.
+  /** Compaction policy with a tombstone-pressure trigger; see
+    * `IndexLifecycle.compactIfFragmented`.
     */
   def compactIfFragmented(
       spark: SparkSession,
       name: String,
       maxFilesPerBucket: Int,
-      maxTombstones: Long): Boolean = {
-    require(maxFilesPerBucket >= 1, "maxFilesPerBucket must be >= 1")
-    val fragmented =
-      graft.sources.IndexLifecycle.tombstonesExceed(
-        spark, tombsTableName(name), "doc_id", maxTombstones) ||
-        graft.sources.IndexLifecycle.bucketsFragmentedBeyond(
-          spark,
-          Seq(postingsTableName(name), posTableName(name), forwardTableName(name)),
-          maxFilesPerBucket)
-    if (fragmented) compactIndex(spark, name)
-    fragmented
-  }
+      maxTombstones: Long): Boolean =
+    IndexLifecycle.compactIfFragmented(spark, layout(name), maxFilesPerBucket, maxTombstones)
 
-  /** BUCKET-SCOPED compaction (round 15 — VERDICT r14 #1): rewrite
-    * ONLY the buckets fragmented past `maxFilesPerBucket`, leaving
-    * every other bucket's files untouched, so the maintenance cost
-    * tracks the TOUCHED buckets' bytes instead of the index
-    * (`Layout.compactBuckets` — at 100 TB the difference between a
-    * bucket-local rewrite and an index-sized one). Returns the bucket
-    * ids rewritten per table (empty map = nothing fragmented, no-op).
-    *
-    * Semantics vs the full `compactIndex`, deliberately narrower:
-    *  - tombstoned rows inside a rewritten bucket are dropped
-    *    OPPORTUNISTICALLY (the rewrite was happening anyway), but the
-    *    tombstone SET stays live: a doc's postings span many term
-    *    buckets (bucket = hash(term)), so only the full compaction —
-    *    which provably rewrites every bucket — may clear the set.
-    *    Reads are unaffected either way (the anti-join is idempotent).
-    *  - the dictionary is not RECOUNTED, but it IS credited (round 15):
-    *    the per-term counts of the rows the rewrite drops are staged
-    *    before and applied as negative partials after
-    *    (`stageDictDeltas`/`applyDictDeltas`), so the summed df stays
-    *    exact for everything this pass physically dropped — at
-    *    touched-bucket cost, with every crash window degrading to the
-    *    documented-conservative overcount.
-    * The query-visible result is therefore IDENTICAL to not compacting
-    * at all — and after a later full `compactIndex`, identical to a
-    * fresh survivor build (both spec-pinned in RetrievalSpec).
+  /** Bucket-scoped compaction of the fragmented buckets; returns the
+    * rewritten bucket ids per table. The tombstone set stays live (only
+    * a full rewrite proves every trace of a doc is gone); the
+    * dictionary is credited for the rows it drops. After a later full
+    * `compactIndex` the index equals a fresh survivor build
+    * (spec-pinned). See `IndexLifecycle.compactFragmentedBuckets`.
     */
   def compactFragmentedBuckets(
       spark: SparkSession,
       name: String,
-      maxFilesPerBucket: Int): Map[String, Seq[Int]] = {
-    require(maxFilesPerBucket >= 1, "maxFilesPerBucket must be >= 1")
-    // ONE listing feeds the emptiness probe and the broadcast size
-    // gate (r18 — the fused-guard pattern of liveView)
-    val (tombRows, tombBytes) =
-      if (!spark.catalog.tableExists(tombsTableName(name))) (0L, 0L)
-      else Layout.parquetDirStats(spark, tombsTableName(name))
-    val tombsLive =
-      if (tombRows == -1L) !spark.table(tombsTableName(name)).isEmpty else tombRows > 0L
-    val dropTombstoned: DataFrame => DataFrame =
-      if (!tombsLive) identity
-      else
-        graft.sources.IndexLifecycle.dropTombstonedTransform(
-          spark, tombsTableName(name), "doc_id", "doc_id", tombBytes)
-    val tombIds =
-      if (!tombsLive) spark.emptyDataFrame
-      else graft.sources.IndexLifecycle.maybeBroadcastBytes(
-        spark, tombBytes,
-        spark.table(tombsTableName(name)).select(col("doc_id")).distinct())
-    Seq(postingsTableName(name), posTableName(name), forwardTableName(name))
-      .filter(spark.catalog.tableExists)
-      .flatMap { table =>
-        val frag = Layout.fragmentedBucketIds(spark, table, maxFilesPerBucket)
-        if (frag.isEmpty) None
-        else {
-          // the opportunistic tombstone-drop credits the dictionary
-          // too (round 15): without this, rows dropped here were the
-          // one source of df overcount that even retirement could not
-          // see (their physical evidence is gone by then)
-          val staged = tombsLive &&
-            table == postingsTableName(name) &&
-            stageDictDeltas(spark, name, frag.toSet, tombIds)
-          Layout.compactBuckets(spark, table, frag.toSet, dropTombstoned)
-          if (staged) applyDictDeltas(spark, name)
-          Some(table -> frag)
-        }
-      }
-      .toMap
-  }
+      maxFilesPerBucket: Int): Map[String, Seq[Int]] =
+    IndexLifecycle.compactFragmentedBuckets(spark, layout(name), maxFilesPerBucket)
 
-  /** Retire the tombstone set WITHOUT a full-generation rewrite
-    * (round 15 — the last index-sized maintenance cost): rewrite
-    * exactly the buckets that still hold PHYSICAL rows of tombstoned
-    * docs (dropping those rows), then clear the set. Cost profile at
-    * scale: one column-pruned trace scan per table (doc_id + bucket
-    * key — a fraction of index bytes, no shuffle past the distinct)
-    * plus `Layout.compactBuckets` of the touched buckets only —
-    * versus `compactIndex`'s full read+sort+rewrite, dict recount and
-    * generation swap. A slim tombstone set touches few buckets (a
-    * doc's postings live in its TERMS' hash buckets; the doc_id-keyed
-    * forward side is computable from the ids alone); a 30%-of-corpus
-    * set degenerates to every bucket — still cheaper than the full
-    * pass, and incremental (per-bucket journaled swaps, readers see
-    * committed buckets throughout, bounded scratch).
-    *
-    * Contract parity with `compactIndex`'s clear: the tombstone
-    * EVIDENCE is gone afterwards, so a retired id may re-ingest (the
-    * spec-pinned post-clear contract). The DICTIONARY is credited in
-    * the same pass (round 15 — closing the seam that made retirement
-    * second-class): the per-term decrement is staged from the touched
-    * files before the rewrite and applied as negative partials after
-    * it commits (`stageDictDeltas`), so summed df is exact over the
-    * survivors without a `recountDict`; crash windows degrade only to
-    * the conservative overcount direction.
-    * Crash windows: each bucket rewrite is journal-protected
-    * (`recoverBucketCompact`, run here before the trace scans so a
-    * prior crash's state is committed before being measured); the set
-    * clears LAST, so a crash anywhere earlier leaves tombstones live
-    * and reads correct — a re-run's scans find only the remaining
-    * traces and converge to the clear. Single-writer maintenance, like
-    * every compaction entry point. Returns the rewritten buckets per
-    * table.
+  /** Retire the tombstone set by rewriting only the buckets that hold
+    * tombstoned docs, crediting the dictionary in the same pass;
+    * returns the rewritten buckets per table. See
+    * `IndexLifecycle.retireTombstones`.
     */
-  def retireTombstones(spark: SparkSession, name: String): Map[String, Seq[Int]] = {
-    val tombsT = tombsTableName(name)
-    if (!spark.catalog.tableExists(tombsT)) return Map.empty
-    // ONE listing feeds the emptiness probe and the broadcast size
-    // gate (r18 — the fused-guard pattern of liveView)
-    val (tombRows, tombBytes) = Layout.parquetDirStats(spark, tombsT)
-    val live = if (tombRows == -1L) !spark.table(tombsT).isEmpty else tombRows > 0L
-    if (!live) return Map.empty
-    val tombs   = spark.table(tombsT)
-    val tombIds = graft.sources.IndexLifecycle.maybeBroadcastBytes(
-      spark, tombBytes, tombs.select(col("doc_id")).distinct())
-    // mask fast path: every tombstone row carries the bucket mask its
-    // delete batch computed (r15 schema, non-null for this family's
-    // table) — touched buckets come from the SLIM set alone, no index
-    // scan. Fallback (legacy 2-col table, rows whose mask is null
-    // because the table family didn't exist at delete time, or any
-    // mask outside the live bucket range — the index was rebuilt under
-    // a different spec since the delete, so the whole mask set is
-    // distrusted, same rule as the IVF twin): the column-pruned trace
-    // scan.
-    def maskedBuckets(maskCol: String, nb: Int): Option[Set[Int]] =
-      if (!tombs.columns.contains(maskCol)) None
-      else {
-        // ONE job for null-probe + distinct ids (r17 — was a limit-1
-        // null scan THEN an explode/distinct): a null mask maps to the
-        // sentinel [-1], which the existing out-of-range distrust
-        // turns into the same None. An EMPTY mask (zero-token doc)
-        // stays empty — it touches no buckets, exactly as before.
-        val ms = tombs
-          .select(explode(
-            when(col(maskCol).isNull, array(lit(-1))).otherwise(col(maskCol))).as("b"))
-          .distinct().collect().map(_.getInt(0)).toSet
-        if (ms.exists(b => b < 0 || b >= nb)) None else Some(ms)
-      }
-    val out = Seq(
-      (postingsTableName(name), "term_h", Some("pb")),
-      (posTableName(name),      "term_h", Some("xb")),
-      (forwardTableName(name),  "doc_id", None))
-      .filter { case (t, _, _) => spark.catalog.tableExists(t) }
-      .flatMap { case (table, key, mask) =>
-        Layout.recoverBucketCompact(spark, table)
-        val nb = Layout.numBuckets(spark, table)
-        // the forward side is bucketed BY doc_id, so its touched
-        // buckets are computable from the tombstone ids directly
-        val touched = mask.flatMap(maskedBuckets(_, nb)).getOrElse {
-          (if (key == "doc_id") tombIds
-           else spark.table(table).join(tombIds, Seq("doc_id"), "left_semi"))
-            .select(Layout.bucketIdExpr(col(key), nb).as("b"))
-            .distinct().collect().map(_.getInt(0)).toSet
-        }
-        if (touched.isEmpty) None
-        else {
-          // ONE physical read of the touched buckets serves BOTH the
-          // dict staging's tombstoned-term counts (semi-join) and the
-          // compaction rewrite's survivor filter (anti-join) — r17,
-          // guide §2.4: persist the raw touched-files frame, and the
-          // identical file-list reads inside stageDictDeltas and
-          // compactBuckets hit the cache by normalized-plan equality
-          // (a miss only costs the second read the r16 code always
-          // paid). Released before the swapped files are deleted is
-          // fine — the cache holds the rows, not the paths.
-          val rawCache: Option[DataFrame] =
-            if (table != postingsTableName(name)) None
-            else {
-              val files = Layout.bucketFiles(spark, table, touched)
-              if (files.isEmpty) None
-              else {
-                val meta = spark.sessionState.catalog.getTableMetadata(
-                  spark.sessionState.sqlParser.parseTableIdentifier(table))
-                Some(spark.read.schema(meta.schema).parquet(files: _*)
-                  .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-              }
-            }
-          try {
-            // dict-exact retirement (round 15): stage the per-term
-            // decrement from the files the rewrite is about to drop,
-            // apply it as negative dict partials once the rewrite
-            // committed — summed df stays exact over the survivors,
-            // at touched-bucket cost (see stageDictDeltas)
-            val staged =
-              table == postingsTableName(name) &&
-                stageDictDeltas(spark, name, touched, tombIds)
-            Layout.compactBuckets(
-              spark, table, touched,
-              graft.sources.IndexLifecycle.dropTombstonedTransform(
-                spark, tombsT, "doc_id", "doc_id", tombBytes))
-            if (staged) applyDictDeltas(spark, name)
-          } finally rawCache.foreach(_.unpersist())
-          Some(table -> touched.toSeq.sorted)
-        }
-      }
-      .toMap
-    // a staging can survive the loop untouched when the postings trace
-    // scan found no evidence at all (a committed-rewrite crash dropped
-    // the rows before their credit applied, and the touched set came
-    // out empty — the trace-scan-era window the fsck row names).
-    // Resolve it BEFORE the clear destroys the tombstone evidence the
-    // verification needs: a staging that verifies against its own
-    // bucket set applies (the exact heal); anything else was condemned
-    // by the verification (conservative overcount).
-    if (spark.catalog.tableExists(dictTableName(name)) &&
-      resolvableStaleStaging(spark, name, tombIds))
-      applyDictDeltas(spark, name)
-    graft.sources.IndexLifecycle.clearTombs(spark, tombsT, "doc_id")
-    out
-  }
+  def retireTombstones(spark: SparkSession, name: String): Map[String, Seq[Int]] =
+    IndexLifecycle.retireTombstones(spark, layout(name))
 
-  /** The incremental-first maintenance policy (round 15): tombstone
-    * pressure retires via bucket-scoped rewrites
-    * (`retireTombstones`), fragmentation defrags via
-    * `compactFragmentedBuckets` — the same triggers as
-    * `compactIfFragmented`, but a bucket-LOCAL trigger never costs a
-    * full-generation rewrite. COST-BASED fallback: when the tombstone
-    * set exceeds `heavyFraction` of the index's live docs, a massive
-    * delete has touched effectively every term bucket anyway, and the
-    * measured crossover (ProfileR15Retire: an all-buckets retirement
-    * reads ~3.1× a full pass — per-table journaled swaps and the trace
-    * scans cost more than the one-shot generation rewrite once every
-    * byte moves regardless) says run `compactIndex` — which also
-    * restores dictionary exactness for free. Below the fraction,
-    * retirement's cost is the bucket masks (or the column-pruned trace
-    * scan) plus the TOUCHED buckets (flat in corpus size at fixed
-    * touch count — measured), and the dictionary is credited in the
-    * same pass (`stageDictDeltas` — summed df exact over the
-    * survivors, no `recountDict` owed). Returns whether any
-    * maintenance ran.
+  /** Incremental-first maintenance policy; see
+    * `IndexLifecycle.maintainIncremental`.
     */
   def maintainIncremental(
       spark: SparkSession,
       name: String,
       maxFilesPerBucket: Int,
       maxTombstones: Long,
-      heavyFraction: Double = 0.2): Boolean = {
-    require(maxFilesPerBucket >= 1, "maxFilesPerBucket must be >= 1")
-    // a torn bucket-count migration resumes at every maintenance entry
-    // (VERDICT r16 #2) — the probe is metadata-only; the resume cost is
-    // the crashed migration the operator already chose to pay, and
-    // leaving it half-done keeps the stale cost profile on the
-    // unswapped tables forever
-    val resumedRebucket = resumeRebucketIfIncoherent(spark, name).nonEmpty
-    // ONE distinct-count job feeds both the budget check and the
-    // heavy-fraction policy (r17 — guide §1/§2.4: tombstonesExceed
-    // followed by a separate nTombs count ran the identical
-    // shuffle+count twice per maintenance entry; the probe result is
-    // the policy input, so compute it once). maxTombstones ==
-    // Long.MaxValue keeps the old short-circuit: no probe at all.
-    val nTombs =
-      if (maxTombstones == Long.MaxValue ||
-        !spark.catalog.tableExists(tombsTableName(name))) -1L
-      else {
-        // footer-count SHORT-CIRCUIT (r18): distinct ids ≤ physical
-        // rows, so a physical count within budget can never trip —
-        // the maintenance call on a healthy (empty-set) index skips
-        // the distinct-count job entirely. -1 (unreadable) runs it.
-        val physical = Layout.parquetRowCount(spark, tombsTableName(name))
-        if (physical >= 0L && physical <= maxTombstones) physical
-        else spark.table(tombsTableName(name)).select(col("doc_id")).distinct().count()
-      }
-    val retired =
-      if (nTombs > maxTombstones) {
-        val liveN =
-          if (spark.catalog.tableExists(statsTableName(name)))
-            statsTable(spark, name).agg(sum(col("n_docs"))).head().getLong(0)
-          else livePostings(spark, name).select(col("doc_id")).distinct().count()
-        if (liveN > 0 && nTombs.toDouble > heavyFraction * liveN.toDouble)
-          compactIndex(spark, name) // measured-cheaper once every bucket moves
-        else
-          retireTombstones(spark, name) // clears the set even when every
-        true                            // trace was already dropped
-      } else false
-    val defragged = compactFragmentedBuckets(spark, name, maxFilesPerBucket).nonEmpty
-    // plain-table file fragmentation (round 15): the stats table and
-    // the positional marker log grow one FILE per committed batch, and
-    // the tombstone table one per delete batch (a streaming-deletion
-    // workload of many tiny batches fragments the table every query's
-    // live-view probe reads, while the id-count budget never trips) —
-    // coalesce (rows preserved: replay semantics and the anti-join are
-    // row-set functions) once they fragment past the same per-table
-    // bound the bucketed tables use
-    val coalesced = Seq(statsTableName(name), posMarkersTableName(name), tombsTableName(name))
-      .filter(spark.catalog.tableExists)
-      .filter(t => Layout.parquetFileCount(spark, t) > maxFilesPerBucket)
-      .map { t => Layout.coalescePlain(spark, t); t }
-      .nonEmpty
-    resumedRebucket || retired || defragged || coalesced
-  }
+      heavyFraction: Double = 0.2): Boolean =
+    IndexLifecycle.maintainIncremental(spark, layout(name), maxFilesPerBucket, maxTombstones, heavyFraction)
 
   /** Maintenance CONSISTENCY CHECK — the fsck a 100 TB index needs
     * after a crash, a killed maintenance job, or an operator mistake:
@@ -1324,7 +888,7 @@ object Postings {
     // the old parallelism/cost profile until an operator re-runs — this
     // row is what tells them to (every maintenance entry point also
     // auto-resumes via resumeRebucketIfIncoherent)
-    bucketSpecIncoherence(spark, name) match {
+    IndexLifecycle.bucketSpecIncoherence(spark, layout(name)) match {
       case Some(target) =>
         val detail = Seq(postingsTableName(name), posTableName(name), forwardTableName(name))
           .filter(spark.catalog.tableExists)
@@ -1753,7 +1317,7 @@ object Postings {
         .agg(count(lit(1)).as("c")).filter(col("c") > 1).count()
       checks += (("marker_log_unique", dups == 0, s"$dups duplicated (batch_id, kind) markers"))
     }
-    bucketSpecIncoherence(spark, name) match {
+    IndexLifecycle.bucketSpecIncoherence(spark, layout(name)) match {
       case Some(target) =>
         checks += (("bucket_spec_coherent", false,
           s"mixed bucket counts — re-run rebucketIndex($name, $target) or any maintenance entry point"))
@@ -1844,9 +1408,8 @@ object Postings {
     fs.delete(new org.apache.hadoop.fs.Path(scratch.toString + ".applying"), true)
   }
 
-  /** Stage the dictionary DECREMENT a bucket rewrite is about to earn
-    * (round 15 — the seam that kept retirement from restoring dict
-    * exactness): the per-term counts of the tombstoned postings rows
+  /** Stage the dictionary DECREMENT a bucket rewrite is about to earn:
+    * the per-term counts of the tombstoned postings rows
     * still PHYSICALLY present in `bucketIds`, negated, written to the
     * `dictDeltaPath` staging dir (a sibling of the dict location —
     * invisible to dict readers because it is OUTSIDE the table path).
@@ -1873,11 +1436,11 @@ object Postings {
     *    tombstoned rows is a pre-rewrite crash leftover — its rows will
     *    be re-staged by the pass that eventually drops them, so
     *    applying it now would credit them twice (summed df undercount,
-    *    the forbidden direction; the r15 form keyed keep-stale off the
-    *    CALLER's bucket set, which an unrelated defrag pass could
-    *    satisfy vacuously): it is CONDEMNED instead. A sidecar-less
-    *    staging (torn before the sidecar write, or pre-r16) is
-    *    unverifiable and likewise condemned.
+    *    the forbidden direction; keying keep-stale off the CALLER's
+    *    bucket set instead would let an unrelated defrag pass satisfy it
+    *    vacuously): it is CONDEMNED instead. A sidecar-less staging
+    *    (torn before the sidecar write) is unverifiable and likewise
+    *    condemned.
     *  - recomputed EMPTY, no staging → nothing to do.
     * No window double-applies; the unrecoverable windows (e.g. an
     * opportunistic drop that never staged, or a condemned pre-rewrite
@@ -2030,9 +1593,8 @@ object Postings {
     if (!fs.exists(scratch)) return
     fs.rename(scratch, applying)
     try {
-      // footer-metadata emptiness probe (r17, no job); -1 (unreadable)
-      // falls through to the read, whose failure condemns below —
-      // identical semantics to the r16 isEmpty probe
+      // footer-metadata emptiness probe, no job; -1 (unreadable)
+      // falls through to the read, whose failure condemns below
       if (Layout.parquetRowCountAt(spark, applying) != 0L) {
         val deltas = spark.read.schema(dictDeltaSchema).parquet(applying.toString)
         deltas.select(col("term_h"), col("term"), col("df"))
@@ -2047,25 +1609,32 @@ object Postings {
     spark.catalog.refreshTable(dictT)
   }
 
-  /** The compaction dict-recount exposed standalone (VERDICT r14 #3):
-    * rewrite the dictionary as the EXACT per-term df over the live
-    * postings — the repair for both a corrupted (under-counting)
-    * dictionary and the legitimate between-delete-and-compaction
-    * overcount drift, without paying a full compaction. Same
-    * term-sorted layout as the compaction rewrite.
+  /** The compaction dict-recount exposed standalone: rewrite the
+    * dictionary as the EXACT per-term df over the live postings — the
+    * repair for both a corrupted (under-counting) dictionary and the
+    * legitimate between-delete-and-compaction overcount, without a
+    * full compaction.
     */
-  def recountDict(spark: SparkSession, name: String): Unit = {
+  def recountDict(spark: SparkSession, name: String): Unit =
+    rewriteDict(spark, name, livePostings(spark, name))
+
+  /** Rewrite the dictionary as one row per term recounted from
+    * `postingsRows`, globally sorted by term so prefix resolution
+    * prunes row groups by min/max range. A recount supersedes any
+    * pending staged credit — a stale decrement applied later would
+    * UNDERCOUNT the fresh exact df — so the staging is condemned.
+    */
+  private def rewriteDict(spark: SparkSession, name: String, postingsRows: DataFrame): Unit = {
     val table = dictTableName(name)
     Layout.recoverDanglingSwap(spark, table)
     val meta = spark.sessionState.catalog.getTableMetadata(
       spark.sessionState.sqlParser.parseTableIdentifier(table))
-    val recounted = livePostings(spark, name)
+    val recounted = postingsRows
       .groupBy(col("term_h"), col("term")).agg(count(lit(1)).as("df"))
       .sort(col("term"))
     Layout.swapGeneration(spark, table, meta) { (scratch, newDir) =>
       recounted.write.mode("overwrite").option("path", newDir).saveAsTable(scratch)
     }
-    // supersedes any pending staged credit (see condemnDictDeltas)
     condemnDictDeltas(spark, name)
   }
 
@@ -2247,15 +1816,8 @@ object Postings {
     out.toSeq.toDF("repair", "applied", "detail")
   }
 
-  def dropIndex(spark: SparkSession, name: String): Unit = {
-    spark.sql(s"DROP TABLE IF EXISTS ${postingsTableName(name)}")
-    spark.sql(s"DROP TABLE IF EXISTS ${statsTableName(name)}")
-    spark.sql(s"DROP TABLE IF EXISTS ${posTableName(name)}")
-    spark.sql(s"DROP TABLE IF EXISTS ${posMarkersTableName(name)}")
-    spark.sql(s"DROP TABLE IF EXISTS ${dictTableName(name)}")
-    spark.sql(s"DROP TABLE IF EXISTS ${forwardTableName(name)}")
-    spark.sql(s"DROP TABLE IF EXISTS ${tombsTableName(name)}")
-  }
+  def dropIndex(spark: SparkSession, name: String): Unit =
+    IndexLifecycle.drop(spark, layout(name))
 
   def dictTable(spark: SparkSession, name: String): DataFrame =
     spark.table(dictTableName(name))
@@ -2673,7 +2235,7 @@ object Postings {
     // corpus stats, so idempotent streaming appends — and deletes,
     // whose markers must SURVIVE the tombstone-clearing compaction —
     // need their own log; see IndexLifecycle)
-    graft.sources.IndexLifecycle.writeEmptyMarkers(
+    IndexLifecycle.writeEmptyMarkers(
       docs.sparkSession, posMarkersTableName(name), s"$path/posmarkers")
     // tombstone table: CREATE-if-absent (not overwrite) — a positional
     // side built next to an existing frequency index under the same
@@ -2685,60 +2247,33 @@ object Postings {
 
   /** Append a batch to the positional index — same append-only bucket
     * contract as `appendBatch` (new bucket files under the existing
-    * spec, nothing rewritten). With `batchId >= 0` the append is
-    * IDEMPOTENT against the marker table, with the same marker-LAST
-    * crash-window semantics as `appendBatch` (replay can duplicate
-    * one uncommitted batch, never lose one).
+    * spec, nothing rewritten), idempotent against the marker log with
+    * `batchId >= 0` (`IndexLifecycle.appendMarked`). Null-text rows
+    * are screened from the tombstone guard exactly as the append
+    * itself screens them.
     */
   def appendPositionalBatch(
       docs: DataFrame,
       idCol: String,
       textCol: String,
       name: String,
-      batchId: Long = -1L): Boolean = {
-    val spark = docs.sparkSession
-    if (batchId >= 0L) {
-      require(
-        spark.catalog.tableExists(posMarkersTableName(name)),
-        s"positional index $name has no marker table — rebuild with writePositionalIndex before idempotent appends")
-      if (graft.sources.IndexLifecycle.markerPresent(
-          spark, posMarkersTableName(name), batchId, graft.sources.IndexLifecycle.Append)) return false
+      batchId: Long = -1L): Boolean =
+    IndexLifecycle.appendMarked(
+      docs.sparkSession, posMarkersTableName(name), tombsTableName(name), "doc_id",
+      docs.filter(col(textCol).isNotNull), idCol, s"appendPositionalBatch($name)", batchId) {
+      Layout.append(positionalPostings(docs, idCol, textCol), posTableName(name))
     }
-    // same enforced caller contract as appendBatch: a still-tombstoned
-    // doc cannot re-add until compaction clears the set (null-text
-    // rows are screened exactly as the append itself screens them)
-    graft.sources.IndexLifecycle.requireNotTombstoned(
-      spark, tombsTableName(name), "doc_id",
-      docs.filter(col(textCol).isNotNull), idCol, s"appendPositionalBatch($name)")
-    Layout.append(positionalPostings(docs, idCol, textCol), posTableName(name))
-    if (batchId >= 0L)
-      graft.sources.IndexLifecycle.writeMarker(
-        spark, posMarkersTableName(name), batchId, graft.sources.IndexLifecycle.Append)
-    true
-  }
 
-  /** Maintain the positional index from a stream — the phrase/proximity
-    * twin of `maintainFromStream`: each micro-batch appends its
-    * positional postings, idempotent under foreachBatch's
-    * at-least-once replay via the marker table, with the owner
-    * session's catalog refreshed after each committed batch (same
-    * cloned-session cache-coherence rule).
+  /** Maintain the positional index from a stream: each micro-batch is
+    * an idempotent `appendPositionalBatch`.
     */
   def maintainPositionalFromStream(
       docs: DataFrame,
       idCol: String,
       textCol: String,
-      name: String): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    val owner = docs.sparkSession
-    docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // refresh only after a batch that wrote (r18), as above
-        if (appendPositionalBatch(batch, idCol, textCol, name, batchId))
-          Seq(posTableName(name), posMarkersTableName(name))
-            .foreach(owner.catalog.refreshTable)
-      }
-  }
+      name: String): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+    IndexLifecycle.foreachBatch(docs, Seq(posTableName(name), posMarkersTableName(name)))(
+      (batch, batchId) => appendPositionalBatch(batch, idCol, textCol, name, batchId))
 
   def positionalTable(spark: SparkSession, name: String): DataFrame =
     spark.table(posTableName(name))

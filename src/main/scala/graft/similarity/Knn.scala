@@ -243,40 +243,27 @@ object Knn {
     graft.sources.Layout.bucketize(
       indexCorpus(corpus, centroids, idCol, vecCol), ivfTableName(name), s"$path/ivf", Seq("cell"), buckets)
     centroids.write.mode("overwrite").option("path", s"$path/cents").saveAsTable(centsTableName(name))
-    // empty (batch_id, kind) commit log — the IVF twin of the
-    // positional index's marker table (the IVF index has no stats
-    // table to carry the marker). Appends and deletes occupy disjoint
-    // kind spaces, so an append stream and a delete stream can share
-    // the index with independent zero-based batch ids (see
-    // IndexLifecycle — through r13 the two shared one undifferentiated
-    // log, so a delete batch id colliding with a prior append's marker
-    // was silently skipped: a lost vector deletion).
+    // the IVF index has no stats table to carry replay markers, so
+    // appends and deletes commit to a (batch_id, kind) marker log
     graft.sources.IndexLifecycle.writeEmptyMarkers(
       corpus.sparkSession, ivfMarkersTableName(name), s"$path/ivfmarkers")
-    // empty tombstone set — vector deletion, same contract as the
-    // posting index's (anti-joined by reads, dropped at compaction)
     writeEmptyIvfTombs(corpus.sparkSession, name, s"$path/ivftombs")
   }
 
   /** (Re)create the index's EMPTY tombstone table. Beyond the shared
     * (vec_id, batch_id) core, IVF tombstones carry a CELL-BUCKET MASK
-    * (round 15, the posting family's `pb`/`xb` twin): `cb` is the
-    * bucket id of the vector's primary cell, computed at DELETE time
-    * from the batch's own vector under the FROZEN centroid model —
-    * the exact per-row function appends assign with — so
-    * `retireIvfTombstones` finds its touched buckets from the slim
-    * tombstone set alone, with no trace scan of the ivf table (the
-    * one trace scan the r15 seams note called out). Nullable: an
-    * ids-only delete (no vector available) writes null and retirement
-    * falls back to the trace scan; a pre-r15 tombstone table lacks
-    * the column entirely.
+    * `cb`: the bucket id of the vector's primary cell, computed at
+    * DELETE time from the batch's own vector under the FROZEN centroid
+    * model — the exact per-row function appends assign with — so
+    * retirement finds its touched buckets from the slim tombstone set
+    * alone, with no trace scan of the ivf table. Nullable: an ids-only
+    * delete writes null and retirement falls back to the trace scan; a
+    * legacy tombstone table lacks the column entirely.
     */
   private def writeEmptyIvfTombs(
       spark: org.apache.spark.sql.SparkSession,
       name: String,
       path: String): Unit = {
-    // catalog metadata only, no zero-row write job (r18) — see
-    // Layout.createEmptyTable; schema unchanged from the writer form
     import org.apache.spark.sql.types._
     graft.sources.Layout.createEmptyTable(
       spark, ivfTombsTableName(name), path,
@@ -287,7 +274,7 @@ object Knn {
   }
 
   /** Append a delete batch's tombstone rows. On a mask-capable table
-    * (r15 schema) with the batch's vectors available (`vecCol`), the
+    * with the batch's vectors available (`vecCol`), the
     * per-vector cell-bucket mask rides each row — cell assignment is
     * the same pure per-row function under the frozen model that
     * `appendIvfBatch` writes with, so the mask is exact BY THE SAME
@@ -334,94 +321,52 @@ object Knn {
     * batch (`Layout.append` — co-partitioning survives), assignment
     * read from the persisted centroid table so callers cannot drift.
     * With `batchId >= 0` the append is IDEMPOTENT against the marker
-    * table, marker written LAST — the same replay-can-duplicate-never-
-    * lose commit discipline as the posting index's `appendBatch`.
+    * log (`IndexLifecycle.appendMarked`); a still-tombstoned vector
+    * cannot re-add until its tombstone clears.
     */
   def appendIvfBatch(
       newVecs: DataFrame,
       idCol: String,
       vecCol: String,
       name: String,
-      batchId: Long = -1L): Boolean = {
-    val spark = newVecs.sparkSession
-    if (batchId >= 0L) {
-      require(
-        spark.catalog.tableExists(ivfMarkersTableName(name)),
-        s"IVF index $name has no marker table — rebuild with writeIvfIndex before idempotent appends")
-      if (graft.sources.IndexLifecycle.markerPresent(
-          spark, ivfMarkersTableName(name), batchId, graft.sources.IndexLifecycle.Append)) return false
+      batchId: Long = -1L): Boolean =
+    graft.sources.IndexLifecycle.appendMarked(
+      newVecs.sparkSession, ivfMarkersTableName(name), ivfTombsTableName(name), "vec_id",
+      newVecs, idCol, s"appendIvfBatch($name)", batchId) {
+      graft.sources.Layout.append(
+        indexCorpus(newVecs, ivfCentroids(newVecs.sparkSession, name), idCol, vecCol),
+        ivfTableName(name))
     }
-    // enforced caller contract (the posting index's rule, mirrored): a
-    // still-tombstoned vector cannot re-add — liveIvf/ivfTopK would
-    // hide it while its index rows accumulate dead bytes; compaction
-    // clears the set and re-opens the id
-    graft.sources.IndexLifecycle.requireNotTombstoned(
-      spark, ivfTombsTableName(name), "vec_id", newVecs, idCol, s"appendIvfBatch($name)")
-    graft.sources.Layout.append(
-      indexCorpus(newVecs, ivfCentroids(spark, name), idCol, vecCol), ivfTableName(name))
-    if (batchId >= 0L)
-      graft.sources.IndexLifecycle.writeMarker(
-        spark, ivfMarkersTableName(name), batchId, graft.sources.IndexLifecycle.Append)
-    true
-  }
 
-  /** Maintain the IVF index from a stream — lifecycle parity with the
-    * posting index's `maintainFromStream`: each micro-batch assigns
-    * its vectors under the FROZEN centroid model and appends them as
-    * own bucket files, idempotent under foreachBatch's at-least-once
-    * replay via the marker table, with the owner session's catalog
-    * refreshed after each committed batch (cloned-session
-    * cache-coherence, the StreamingSpec-caught rule).
+  /** Maintain the IVF index from a stream: each micro-batch is an
+    * idempotent `appendIvfBatch` under the frozen centroid model.
     */
   def maintainIvfFromStream(
       stream: DataFrame,
       idCol: String,
       vecCol: String,
-      name: String): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    val owner = stream.sparkSession
-    stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // refresh only after a batch that wrote (r18): a replayed
-        // batch changed nothing — see Postings.maintainFromStream
-        if (appendIvfBatch(batch, idCol, vecCol, name, batchId))
-          Seq(ivfTableName(name), ivfMarkersTableName(name))
-            .filter(owner.catalog.tableExists)
-            .foreach(owner.catalog.refreshTable)
-      }
-  }
+      name: String): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+    graft.sources.IndexLifecycle.foreachBatch(stream, Seq(ivfTableName(name), ivfMarkersTableName(name)))(
+      (batch, batchId) => appendIvfBatch(batch, idCol, vecCol, name, batchId))
 
-  /** Vector DELETION — the IVF twin of `Postings.deleteBatch`
-    * (curation removes contaminated/redacted docs' vectors exactly as
-    * often as their text): tombstone rows `(vec_id, batch_id)` that
-    * `liveIvf` (and so `ivfTopK`) anti-joins; physical drop happens at
-    * `compactIvfIndex`. No stats adjustment exists to make — cosine is
-    * per-pair, the index carries no corpus-level scoring state — so
-    * deletion is pure set semantics. Marker-LAST commit discipline via
-    * the shared ivfmarkers log: a replayed delete duplicates tombstone
-    * rows (harmless under anti-join), never half-applies. The FROZEN
-    * centroid model is deliberately untouched — centroids are the
-    * model, not corpus rows; a deleted vector that seeded a centroid
-    * keeps quantizing (re-training is an explicit rebuild).
+  /** Vector DELETION (curation removes contaminated/redacted docs'
+    * vectors exactly as often as their text): tombstone rows
+    * `(vec_id, batch_id)` that `liveIvf` (and so `ivfTopK`) anti-joins,
+    * dropped physically by maintenance. Cosine is per-pair and the
+    * index carries no corpus-level scoring state, so deletion is pure
+    * set semantics. Marker-LAST in the delete kind space of the marker
+    * log: a replayed delete duplicates tombstone rows (harmless under
+    * anti-join), never half-applies. A vector already tombstoned by a
+    * DIFFERENT batch refuses loudly; the batch's own rows are excluded
+    * so a torn delete's replay completes. The FROZEN centroid model is
+    * untouched — a deleted vector that seeded a centroid keeps
+    * quantizing (re-training is an explicit migration).
     *
-    * Replay idempotence reads ONLY the delete kind space of the
-    * marker log (through r13 appends and deletes shared one
-    * undifferentiated batch-id space, so a delete whose id collided
-    * with a prior append marker was silently skipped — a lost
-    * redaction). The enforced caller contract mirrors
-    * `Postings.deleteBatch`: a vector already tombstoned by a
-    * DIFFERENT batch refuses loudly (double-delete), while the
-    * batch's own rows are excluded so a torn delete's replay
-    * completes.
-    *
-    * `vecCol` (round 15): when the delete batch carries the vectors —
-    * the unified curation shape deletes whole doc rows, text AND
-    * embedding — the cell-bucket mask is computed HERE under the
-    * frozen model and rides each tombstone row, making
-    * `retireIvfTombstones` scan-free (the r15 seams note's one
-    * remaining trace scan). Ids-only deletes stay supported: null
-    * mask, trace-scan retirement. See `writeIvfTombRows` for the
-    * caller contract the mask rides.
+    * `vecCol`: when the delete batch carries the vectors, the
+    * cell-bucket mask is computed here under the frozen model and
+    * rides each tombstone row, so retirement needs no trace scan.
+    * Ids-only deletes write a null mask and retirement trace-scans.
+    * See `writeIvfTombRows` for the caller contract the mask rides.
     */
   def deleteIvfBatch(
       ids: DataFrame,
@@ -445,32 +390,19 @@ object Knn {
     true
   }
 
-  /** Maintain the IVF index from a DELETION stream — the vector twin
-    * of `Postings.maintainDeletesFromStream`, completing the unified
-    * corpus-curation shape (delete a doc → both its text and its
-    * embedding leave every index): each micro-batch tombstones its
-    * vector ids (`deleteIvfBatch`), idempotent under foreachBatch's
-    * at-least-once replay via the delete kind space of the marker
-    * log, so this stream and `maintainIvfFromStream` can share the
-    * index with independent zero-based batch ids. Owner-session
-    * catalog refreshed per batch (the cloned-session coherence rule).
+  /** Maintain the IVF index from a DELETION stream (delete a doc → both
+    * its text and its embedding leave every index): each micro-batch
+    * is an idempotent `deleteIvfBatch`, so this stream and
+    * `maintainIvfFromStream` can share the index with independent
+    * zero-based batch ids.
     */
   def maintainIvfDeletesFromStream(
       ids: DataFrame,
       idCol: String,
       name: String,
-      vecCol: Option[String] = None): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    val owner = ids.sparkSession
-    ids.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // refresh only after a batch that wrote (r18), as above
-        if (deleteIvfBatch(batch, idCol, name, batchId, vecCol))
-          Seq(ivfTombsTableName(name), ivfMarkersTableName(name))
-            .filter(owner.catalog.tableExists)
-            .foreach(owner.catalog.refreshTable)
-      }
-  }
+      vecCol: Option[String] = None): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+    graft.sources.IndexLifecycle.foreachBatch(ids, Seq(ivfTombsTableName(name), ivfMarkersTableName(name)))(
+      (batch, batchId) => deleteIvfBatch(batch, idCol, name, batchId, vecCol))
 
   /** The IVF index with tombstoned vectors filtered out — what every
     * query path reads. Empty-set fast path; broadcast anti-join above
@@ -550,252 +482,69 @@ object Knn {
       .select(col("q_id"), col("cell"), col("n_id"), col("rank"), col("cos"))
   }
 
-  /** Compaction POLICY for the IVF index — the `compactIfFragmented`
-    * twin: compacts when cell buckets have fragmented past
-    * `maxFilesPerBucket` appends OR when more than `maxTombstones`
-    * distinct vectors are tombstoned (the read-side anti-join set must
-    * stay broadcast-sized — the policy is where that contract is
-    * enforced). Returns whether a compaction ran.
+  /** The IVF index's layout for the shared maintenance ops: one
+    * cell-bucketed table whose delete-time mask is `cb`, the marker log
+    * as its commit log, the frozen centroid model as a side table the
+    * lifecycle never rewrites (the model IS the index's identity;
+    * `retrainIvfIndex` is the explicit migration). Each vector is one
+    * row — one cell, one bucket (the `vector_unique` fsck invariant) —
+    * which is what lets bucket-scoped defrag retire its tombstones per
+    * bucket and the heavy-fraction policy read a footer bound.
     */
+  private def ivfLayout(name: String): graft.sources.IndexLifecycle.IndexLayout =
+    graft.sources.IndexLifecycle.IndexLayout(
+      tombs = ivfTombsTableName(name),
+      tombId = "vec_id",
+      bucketed = Seq(graft.sources.IndexLifecycle.BucketedTable(ivfTableName(name), "cell", "n_id", Some("cb"))),
+      plain = Seq(ivfMarkersTableName(name)),
+      side = Seq(centsTableName(name)),
+      liveCount = spark => liveIvf(spark, name).count(),
+      idInOneRow = true)
+
+  /** Compaction policy: see `IndexLifecycle.compactIfFragmented`. */
   def compactIvfIfFragmented(
       spark: org.apache.spark.sql.SparkSession,
       name: String,
       maxFilesPerBucket: Int,
-      maxTombstones: Long = Long.MaxValue): Boolean = {
-    require(maxFilesPerBucket >= 1, "maxFilesPerBucket must be >= 1")
-    val run =
-      graft.sources.IndexLifecycle.tombstonesExceed(
-        spark, ivfTombsTableName(name), "vec_id", maxTombstones) ||
-        graft.sources.IndexLifecycle.bucketsFragmentedBeyond(
-          spark, Seq(ivfTableName(name)), maxFilesPerBucket)
-    if (run) compactIvfIndex(spark, name)
-    run
-  }
+      maxTombstones: Long = Long.MaxValue): Boolean =
+    graft.sources.IndexLifecycle.compactIfFragmented(spark, ivfLayout(name), maxFilesPerBucket, maxTombstones)
 
-  /** Compact the IVF index after many incremental appends — the same
-    * maintenance pass as `Postings.compactIndex`, for the same reason:
-    * each append adds its own file set to every cell bucket, and the
-    * accumulated fragments cost per-file open/footer overhead and
-    * defeat row-group pruning on the sorted cell key. `Layout.compact`
-    * restores one file per bucket under the same bucket/sort spec, so
-    * the zero-exchange cell self-join property is untouched. The
-    * frozen centroid model is deliberately NOT rewritten (the model IS
-    * the index's identity); the marker log keeps EVERY ROW (the
-    * replay-idempotence commit log) but its FILES coalesce — each
-    * batch appended its own one-row file (round 15,
-    * `Layout.coalescePlain`).
+  /** Full compaction — one file per cell bucket, tombstoned vectors
+    * dropped, marker-log files coalesced; see `IndexLifecycle.compact`.
     */
-  def compactIvfIndex(spark: org.apache.spark.sql.SparkSession, name: String): Unit = {
-    // tombstone-drop rides the rewrite, then the set clears LAST — the
-    // same crash-ordering as Postings.compactIndex (a crash before the
-    // clear leaves tombstones live and reads still correct); shared
-    // lifecycle machinery, see IndexLifecycle
-    val tombsLive = graft.sources.IndexLifecycle.tombsLive(spark, ivfTombsTableName(name))
-    val dropTombstoned: DataFrame => DataFrame =
-      if (!tombsLive) identity
-      else
-        graft.sources.IndexLifecycle.dropTombstonedTransform(
-          spark, ivfTombsTableName(name), "vec_id", "n_id")
-    graft.sources.Layout.compact(spark, ivfTableName(name), dropTombstoned)
-    if (spark.catalog.tableExists(ivfMarkersTableName(name)))
-      graft.sources.Layout.coalescePlain(spark, ivfMarkersTableName(name))
-    if (tombsLive)
-      graft.sources.IndexLifecycle.clearTombs(spark, ivfTombsTableName(name), "vec_id")
-  }
+  def compactIvfIndex(spark: org.apache.spark.sql.SparkSession, name: String): Unit =
+    graft.sources.IndexLifecycle.compact(spark, ivfLayout(name))
 
-  /** BUCKET-SCOPED IVF compaction (round 15 — VERDICT r14 #1): rewrite
-    * only the cell buckets fragmented past `maxFilesPerBucket`
-    * (`Layout.compactBuckets` — cost tracks the touched buckets'
-    * bytes, never the index). Returns the rewritten bucket ids.
-    *
-    * Unlike the posting index — where a doc's postings span many term
-    * buckets, so only the full compaction may clear the tombstone set —
-    * an IVF vector lives in exactly ONE cell bucket (the
-    * `vector_unique` fsck invariant). That makes PER-BUCKET tombstone
-    * accounting exact: every tombstoned id physically present in the
-    * touched buckets is fully dropped by the rewrite and leaves the
-    * set (`IndexLifecycle.removeTombs`, LAST — a crash in between
-    * leaves it live and reads still correct); ids tombstoned in
-    * untouched buckets stay until their bucket is rewritten. The
-    * cleared-id snapshot is collected BEFORE the rewrite (the rewrite
-    * deletes the fragments it would be read from) and is bounded by
-    * the broadcast-sized tombstone set.
+  /** Bucket-scoped compaction of the fragmented cell buckets; returns
+    * the rewritten bucket ids. See
+    * `IndexLifecycle.compactFragmentedBuckets`.
     */
   def compactFragmentedIvfBuckets(
       spark: org.apache.spark.sql.SparkSession,
       name: String,
-      maxFilesPerBucket: Int): Seq[Int] = {
-    val table = ivfTableName(name)
-    val frag = graft.sources.Layout.fragmentedBucketIds(spark, table, maxFilesPerBucket)
-    if (frag.isEmpty) return Nil
-    // ONE listing feeds the emptiness probe and the broadcast size
-    // gate (r18 — the fused-guard pattern of liveView)
-    val (tombRows, tombBytes) =
-      if (!spark.catalog.tableExists(ivfTombsTableName(name))) (0L, 0L)
-      else graft.sources.Layout.parquetDirStats(spark, ivfTombsTableName(name))
-    val tombsLive =
-      if (tombRows == -1L) !spark.table(ivfTombsTableName(name)).isEmpty else tombRows > 0L
-    val clearedIds: Seq[Long] =
-      if (!tombsLive) Nil
-      else {
-        val files = graft.sources.Layout.bucketFiles(spark, table, frag.toSet)
-        val meta = spark.sessionState.catalog.getTableMetadata(
-          spark.sessionState.sqlParser.parseTableIdentifier(table))
-        spark.read.schema(meta.schema).parquet(files: _*)
-          .select(col("n_id").as("vec_id"))
-          .join(
-            graft.sources.IndexLifecycle.maybeBroadcastBytes(
-              spark, tombBytes,
-              spark.table(ivfTombsTableName(name)).select(col("vec_id"))),
-            Seq("vec_id"))
-          .distinct().collect().map(_.getLong(0)).toSeq
-      }
-    val dropTombstoned: DataFrame => DataFrame =
-      if (!tombsLive) identity
-      else
-        graft.sources.IndexLifecycle.dropTombstonedTransform(
-          spark, ivfTombsTableName(name), "vec_id", "n_id", tombBytes)
-    graft.sources.Layout.compactBuckets(spark, table, frag.toSet, dropTombstoned)
-    if (clearedIds.nonEmpty)
-      graft.sources.IndexLifecycle.removeTombs(
-        spark, ivfTombsTableName(name), "vec_id", clearedIds)
-    frag
-  }
+      maxFilesPerBucket: Int): Seq[Int] =
+    graft.sources.IndexLifecycle.compactFragmentedBuckets(spark, ivfLayout(name), maxFilesPerBucket)
+      .getOrElse(ivfTableName(name), Nil)
 
-  /** Retire the IVF tombstone set WITHOUT a full-generation rewrite —
-    * the vector-side twin of `Postings.retireTombstones`. Mask fast
-    * path (round 15): when every tombstone row carries the cell-bucket
-    * mask its delete batch computed (`cb` non-null — a vector-carrying
-    * `deleteIvfBatch`), the touched buckets come from the SLIM set
-    * alone — no scan of the ivf table at all. Fallback (legacy
-    * 2-column table, ids-only deletes, or a mask outside the current
-    * bucket range): one column-pruned trace scan (n_id + cell) finds
-    * the cell buckets still holding tombstoned vectors. Either way,
-    * exactly those buckets are rewritten with the drop transform
-    * (journal-protected, readers see committed buckets throughout),
-    * and the set clears LAST. A vector lives in one cell bucket, so a
-    * slim set touches few buckets by construction. Post-clear, a
-    * retired id may re-ingest — the same contract as
-    * `compactIvfIndex`'s clear. Returns the rewritten bucket ids.
+  /** Retire the tombstone set by rewriting only the cell buckets that
+    * hold tombstoned vectors; returns the rewritten bucket ids. See
+    * `IndexLifecycle.retireTombstones`.
     */
-  def retireIvfTombstones(spark: org.apache.spark.sql.SparkSession, name: String): Seq[Int] = {
-    val tombsT = ivfTombsTableName(name)
-    if (!spark.catalog.tableExists(tombsT)) return Nil
-    // ONE listing feeds the emptiness probe and the broadcast size
-    // gate (r18 — the fused-guard pattern of liveView)
-    val (tombRows, tombBytes) = graft.sources.Layout.parquetDirStats(spark, tombsT)
-    val live = if (tombRows == -1L) !spark.table(tombsT).isEmpty else tombRows > 0L
-    if (!live) return Nil
-    val table = ivfTableName(name)
-    graft.sources.Layout.recoverBucketCompact(spark, table)
-    val nb = graft.sources.Layout.numBuckets(spark, table)
-    val tombs = spark.table(tombsT)
-    val tombIds = graft.sources.IndexLifecycle.maybeBroadcastBytes(
-      spark, tombBytes, tombs.select(col("vec_id").as("n_id")).distinct())
-    val maskedBuckets: Option[Set[Int]] =
-      if (!tombs.columns.contains("cb")) None
-      else {
-        // ONE job for null-probe + distinct bucket ids (r17, same
-        // fusion as the postings twin): a null mask maps to the
-        // sentinel [-1], which the out-of-range distrust below turns
-        // into the same trace-scan fallback.
-        val ms = tombs
-          .select(explode(
-            when(col("cb").isNull, array(lit(-1))).otherwise(col("cb"))).as("b"))
-          .distinct().collect().map(_.getInt(0)).toSet
-        // a mask outside the live bucket range means the index was
-        // rebuilt under a different spec since the delete — distrust
-        // the whole mask set and fall back to the trace scan
-        if (ms.exists(b => b < 0 || b >= nb)) None else Some(ms)
-      }
-    val touched = maskedBuckets.getOrElse {
-      spark.table(table)
-        .join(tombIds, Seq("n_id"), "left_semi")
-        .select(graft.sources.Layout.bucketIdExpr(col("cell"), nb).as("b"))
-        .distinct().collect().map(_.getInt(0)).toSet
-    }
-    if (touched.nonEmpty)
-      graft.sources.Layout.compactBuckets(
-        spark, table, touched,
-        graft.sources.IndexLifecycle.dropTombstonedTransform(
-          spark, tombsT, "vec_id", "n_id", tombBytes))
-    graft.sources.IndexLifecycle.clearTombs(spark, tombsT, "vec_id")
-    touched.toSeq.sorted
-  }
+  def retireIvfTombstones(spark: org.apache.spark.sql.SparkSession, name: String): Seq[Int] =
+    graft.sources.IndexLifecycle.retireTombstones(spark, ivfLayout(name))
+      .getOrElse(ivfTableName(name), Nil)
 
-  /** The incremental-first IVF maintenance policy — the vector-side
-    * twin of `Postings.maintainIncremental`: tombstone pressure
-    * retires via bucket-scoped rewrites, fragmentation defrags via
-    * `compactFragmentedIvfBuckets`; a bucket-local trigger never costs
-    * a full-generation rewrite (the model stays frozen either way —
-    * `retrainIvfIndex` is the explicit migration). Same cost-based
-    * fallback as the posting side: above `heavyFraction` of the live
-    * vectors tombstoned, effectively every cell bucket moves and the
-    * one-shot `compactIvfIndex` generation rewrite is cheaper than
-    * per-bucket journaled swaps. Returns whether any maintenance ran.
+  /** Incremental-first maintenance policy; see
+    * `IndexLifecycle.maintainIncremental`.
     */
   def maintainIvfIncremental(
       spark: org.apache.spark.sql.SparkSession,
       name: String,
       maxFilesPerBucket: Int,
       maxTombstones: Long,
-      heavyFraction: Double = 0.2): Boolean = {
-    require(maxFilesPerBucket >= 1, "maxFilesPerBucket must be >= 1")
-    // ONE distinct-count job feeds both the budget check and the
-    // heavy-fraction policy (r17, same fusion as the postings twin).
-    val nTombs =
-      if (maxTombstones == Long.MaxValue ||
-        !spark.catalog.tableExists(ivfTombsTableName(name))) -1L
-      else {
-        // footer-count SHORT-CIRCUIT (r18, postings-side twin):
-        // distinct ids ≤ physical rows, so a physical count within
-        // budget can never trip — no distinct-count job on a healthy
-        // (empty-set) index. -1 (unreadable) runs the job.
-        val physical = graft.sources.Layout.parquetRowCount(spark, ivfTombsTableName(name))
-        if (physical >= 0L && physical <= maxTombstones) physical
-        else spark.table(ivfTombsTableName(name)).select(col("vec_id")).distinct().count()
-      }
-    val retired =
-      if (nTombs > maxTombstones) {
-        // heavy-fraction policy WITHOUT the live-count job when the
-        // footer bound is decisive (r18 — VERDICT r17 #8): physical
-        // ivf rows P bound the live count as P - nTombs ≤ liveN ≤ P
-        // (each vector lives in exactly one index row — the
-        // `vector_unique` fsck invariant appends preserve), so
-        //   nTombs > hf·P            ⟹ heavy (liveN ≤ P, and
-        //                              liveN ≥ P - nTombs > 0),
-        //   nTombs ≤ hf·(P - nTombs) ⟹ not heavy (liveN ≥ P - nTombs).
-        // Only the band in between — or an unreadable footer — pays
-        // the exact anti-join count, and the branch decision is
-        // IDENTICAL to the exact test in every decisive case. (An
-        // index violating vector_unique is already red in fsck; the
-        // bound then still picks a correct maintenance mode, just not
-        // necessarily the cheaper one.)
-        val physical = graft.sources.Layout.parquetRowCount(spark, ivfTableName(name))
-        val heavy =
-          if (physical >= 0L && physical - nTombs > 0L &&
-            nTombs.toDouble > heavyFraction * physical.toDouble) true
-          else if (physical >= 0L &&
-            nTombs.toDouble <= heavyFraction * (physical - nTombs).toDouble) false
-          else {
-            val liveN = liveIvf(spark, name).count()
-            liveN > 0 && nTombs.toDouble > heavyFraction * liveN.toDouble
-          }
-        if (heavy) compactIvfIndex(spark, name)
-        else retireIvfTombstones(spark, name)
-        true
-      } else false
-    val defragged = compactFragmentedIvfBuckets(spark, name, maxFilesPerBucket).nonEmpty
-    // plain-table FILE fragmentation — one file per committed batch
-    // (marker log) / per delete batch (tombstone table); coalesce
-    // rows-preserved (see Postings.maintainIncremental)
-    val coalesced = Seq(ivfMarkersTableName(name), ivfTombsTableName(name))
-      .filter(spark.catalog.tableExists)
-      .filter(t => graft.sources.Layout.parquetFileCount(spark, t) > maxFilesPerBucket)
-      .map { t => graft.sources.Layout.coalescePlain(spark, t); t }
-      .nonEmpty
-    retired || defragged || coalesced
-  }
+      heavyFraction: Double = 0.2): Boolean =
+    graft.sources.IndexLifecycle.maintainIncremental(
+      spark, ivfLayout(name), maxFilesPerBucket, maxTombstones, heavyFraction)
 
   def ivfTable(spark: org.apache.spark.sql.SparkSession, name: String): DataFrame =
     spark.table(ivfTableName(name))
@@ -804,21 +553,19 @@ object Knn {
 
   /** Rewrite the IVF table's generation with `rows` (same bucket spec,
     * same swap discipline as every rewrite) — shared by repair and
-    * retrain.
+    * retrain, whose rows are derived rather than the table's own.
     */
   private def rewriteIvf(
       spark: org.apache.spark.sql.SparkSession,
       name: String,
-      rows: DataFrame,
-      newBuckets: Option[Int] = None): Unit = {
+      rows: DataFrame): Unit = {
     val table = ivfTableName(name)
     graft.sources.Layout.recoverDanglingSwap(spark, table)
     graft.sources.Layout.recoverBucketCompact(spark, table)
     val meta = spark.sessionState.catalog.getTableMetadata(
       spark.sessionState.sqlParser.parseTableIdentifier(table))
-    val spec = meta.bucketSpec.getOrElse(
-      throw new IllegalArgumentException(s"$table has no bucket spec"))
-    val buckets = newBuckets.getOrElse(spec.numBuckets)
+    val buckets = meta.bucketSpec.getOrElse(
+      throw new IllegalArgumentException(s"$table has no bucket spec")).numBuckets
     graft.sources.Layout.swapGeneration(spark, table, meta) { (scratch, newDir) =>
       graft.sources.Layout.bucketize(
         rows.repartition(buckets, rows("cell")),
@@ -826,90 +573,38 @@ object Knn {
     }
   }
 
-  /** Bucket-count GROWTH POLICY, vector side — the scheduler-facing
-    * form of `rebucketIvfIndex` (see `Postings.rebucketIfOvergrown`
-    * for the rationale): a metadata probe of ivf-table parquet bytes
-    * per cell bucket against `maxBytesPerBucket`; above it, migrate to
-    * the smallest `growthFactor`-power multiple that restores the
-    * bound. Returns the new bucket count when a migration ran.
-    */
+  /** Bucket-count growth policy; see `IndexLifecycle.rebucketIfOvergrown`. */
   def rebucketIvfIfOvergrown(
       spark: org.apache.spark.sql.SparkSession,
       name: String,
       maxBytesPerBucket: Long,
-      growthFactor: Int = 4): Option[Int] = {
-    require(maxBytesPerBucket >= 1L, "maxBytesPerBucket must be >= 1")
-    require(growthFactor >= 2, "growthFactor must be >= 2")
-    val table = ivfTableName(name)
-    if (!spark.catalog.tableExists(table)) return None
-    val nb    = graft.sources.Layout.numBuckets(spark, table)
-    val bytes = graft.sources.Layout.parquetBytes(spark, table)
-    if (bytes <= maxBytesPerBucket * nb.toLong) None
-    else {
-      val n = graft.sources.Layout.grownBucketCount(nb, bytes, maxBytesPerBucket, growthFactor)
-      rebucketIvfIndex(spark, name, n)
-      Some(n)
-    }
-  }
+      growthFactor: Int = 4): Option[Int] =
+    graft.sources.IndexLifecycle.rebucketIfOvergrown(spark, ivfLayout(name), maxBytesPerBucket, growthFactor)
 
-  /** Two-sided bucket-count policy, vector side — see
-    * `Postings.rebucketIfMisSized` (grow = `rebucketIvfIfOvergrown`
-    * verbatim; shrink fires under `minBytesPerBucket`, floored at
-    * `minBuckets`, never past the grow bound).
-    */
+  /** Two-sided bucket-count policy; see `IndexLifecycle.rebucketIfMisSized`. */
   def rebucketIvfIfMisSized(
       spark: org.apache.spark.sql.SparkSession,
       name: String,
       maxBytesPerBucket: Long,
       minBytesPerBucket: Long,
       growthFactor: Int = 4,
-      minBuckets: Int = 8): Option[Int] = {
-    require(minBytesPerBucket >= 0L, "minBytesPerBucket must be >= 0")
-    require(minBuckets >= 1, "minBuckets must be >= 1")
-    rebucketIvfIfOvergrown(spark, name, maxBytesPerBucket, growthFactor).orElse {
-      val table = ivfTableName(name)
-      if (!spark.catalog.tableExists(table) || minBytesPerBucket == 0L) None
-      else {
-        val nb    = graft.sources.Layout.numBuckets(spark, table)
-        val bytes = graft.sources.Layout.parquetBytes(spark, table)
-        val n = graft.sources.Layout.shrunkenBucketCount(
-          nb, bytes, minBytesPerBucket, maxBytesPerBucket, growthFactor, minBuckets)
-        if (n == nb) None
-        else {
-          rebucketIvfIndex(spark, name, n)
-          Some(n)
-        }
-      }
-    }
-  }
+      minBuckets: Int = 8): Option[Int] =
+    graft.sources.IndexLifecycle.rebucketIfMisSized(
+      spark, ivfLayout(name), maxBytesPerBucket, minBytesPerBucket, growthFactor, minBuckets)
 
-  /** BUCKET-COUNT migration, vector side (round 16 — VERDICT r15 #2):
-    * one generation rewrite of the ivf table under `newBuckets`, the
-    * structural twin of `retrainIvfIndex` with the MODEL frozen and
-    * only the murmur3 bucket modulus changing. Why it exists: the cell
-    * bucket count is frozen at `writeIvfIndex` time, so a 100×-grown
-    * corpus keeps its original buckets — per-bucket bytes grow
-    * unbounded and `compactFragmentedIvfBuckets`/`retireIvfTombstones`
-    * pay 1/N of the whole index per touched bucket. Identical to a
-    * fresh `writeIvfIndex` of the survivors at the new count
-    * (spec-pinned; the e14 gate answers e11's survivor oracle verbatim
-    * after an 8→32 migration): the rewrite reads the LIVE view, so
-    * tombstoned vectors drop physically and the set clears LAST —
-    * which also retires delete-time `cb` cell-bucket masks computed
-    * under the old modulus. Centroid model and marker log untouched
-    * (replayed batches stay no-ops; assignment is unchanged — `cell`
-    * ids are model-side, only their file placement moves).
+  /** BUCKET-COUNT migration: the cell bucket count is frozen at
+    * `writeIvfIndex` time, so a 100×-grown corpus keeps its original
+    * buckets and every bucket-scoped rewrite pays 1/N of the whole
+    * index. One generation rewrite under `newBuckets` with the model
+    * frozen — only the murmur3 modulus changes; identical to a fresh
+    * `writeIvfIndex` of the survivors at the new count. See
+    * `IndexLifecycle.rebucket`.
     */
   def rebucketIvfIndex(
       spark: org.apache.spark.sql.SparkSession,
       name: String,
-      newBuckets: Int): Unit = {
-    require(newBuckets >= 1, "newBuckets must be >= 1")
-    val tombsWere = graft.sources.IndexLifecycle.tombsLive(spark, ivfTombsTableName(name))
-    rewriteIvf(spark, name, liveIvf(spark, name), Some(newBuckets))
-    if (tombsWere)
-      graft.sources.IndexLifecycle.clearTombs(spark, ivfTombsTableName(name), "vec_id")
-  }
+      newBuckets: Int): Unit =
+    graft.sources.IndexLifecycle.rebucket(spark, ivfLayout(name), newBuckets)
 
   /** fsck that HEALS, vector side (VERDICT r14 #3): map each red
     * `checkIvfIndex` row to a repair derived from the index and the
@@ -1340,12 +1035,8 @@ object Knn {
     }
   }
 
-  def dropIvfIndex(spark: org.apache.spark.sql.SparkSession, name: String): Unit = {
-    spark.sql(s"DROP TABLE IF EXISTS ${ivfTableName(name)}")
-    spark.sql(s"DROP TABLE IF EXISTS ${centsTableName(name)}")
-    spark.sql(s"DROP TABLE IF EXISTS ${ivfMarkersTableName(name)}")
-    spark.sql(s"DROP TABLE IF EXISTS ${ivfTombsTableName(name)}")
-  }
+  def dropIvfIndex(spark: org.apache.spark.sql.SparkSession, name: String): Unit =
+    graft.sources.IndexLifecycle.drop(spark, ivfLayout(name))
 
   /** Streaming embedding near-dup matcher: arriving vectors matched
     * against a STATIC centroid-indexed corpus (`indexCorpus`), exact

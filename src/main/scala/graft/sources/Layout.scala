@@ -396,8 +396,12 @@ object Layout {
     * so the row appears atomically, and a crash mid-write leaves only
     * invisible garbage, never a torn visible file. The session's
     * cached relation is refreshed afterwards, exactly as insertInto
-    * would. Values: `Long`/`String` append a value, `null` appends a
-    * NULL (the column is written `optional`).
+    * would. Each field takes its parquet type from the table's CATALOG
+    * schema (LONG → INT64, STRING → UTF-8 BINARY, both `optional`), so
+    * a `null` is a NULL of the column's own type. Fails closed with
+    * `IllegalArgumentException` — before anything is written — on a
+    * column missing from the schema, a catalog type this writer does
+    * not support, or a value whose class does not match its column.
     */
   private[graft] def appendRowDriverSide(
       spark: SparkSession,
@@ -405,20 +409,32 @@ object Layout {
       row: Seq[(String, Any)]): Unit = {
     import org.apache.parquet.schema.{LogicalTypeAnnotation, Types}
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
+    import org.apache.spark.sql.types.{LongType, StringType}
     val meta = spark.sessionState.catalog.getTableMetadata(
       spark.sessionState.sqlParser.parseTableIdentifier(tableName))
+    val b = Types.buildMessage()
+    row.foreach { case (n, v) =>
+      val field = meta.schema.fields.find(_.name == n).getOrElse(
+        throw new IllegalArgumentException(s"$tableName has no column $n"))
+      def requireValue(ok: Boolean): Unit =
+        require(v == null || ok,
+          s"$tableName.$n is ${field.dataType.simpleString}: cannot write ${v.getClass.getName} $v")
+      field.dataType match {
+        case LongType =>
+          requireValue(v.isInstanceOf[Long])
+          b.addField(Types.optional(INT64).named(n))
+        case StringType =>
+          requireValue(v.isInstanceOf[String])
+          b.addField(Types.optional(BINARY).as(LogicalTypeAnnotation.stringType()).named(n))
+        case other =>
+          throw new IllegalArgumentException(
+            s"$tableName.$n: catalog type ${other.simpleString} is not supported by the driver-side writer")
+      }
+    }
     val dir  = new org.apache.hadoop.fs.Path(meta.location)
     val conf = spark.sparkContext.hadoopConfiguration
     val fs   = dir.getFileSystem(conf)
     if (!fs.exists(dir)) fs.mkdirs(dir)
-    val b = Types.buildMessage()
-    row.foreach {
-      case (n, _: Long)   => b.addField(Types.optional(INT64).named(n))
-      case (n, _: String) => b.addField(
-        Types.optional(BINARY).as(LogicalTypeAnnotation.stringType()).named(n))
-      case (n, null)      => b.addField(Types.optional(INT64).named(n))
-      case (n, v)         => throw new IllegalArgumentException(s"$n: unsupported $v")
-    }
     val schema = b.named("spark_schema")
     val unique = java.util.UUID.randomUUID().toString
     val tmp    = new org.apache.hadoop.fs.Path(dir, s".graft-$unique.parquet.tmp")
@@ -433,8 +449,7 @@ object Layout {
       row.foreach {
         case (n, v: Long)   => g.add(n, v)
         case (n, v: String) => g.add(n, v)
-        case (_, null)      => () // optional field, absent = NULL
-        case _              => ()
+        case _              => () // null: optional field, absent = NULL
       }
       writer.write(g)
     } finally writer.close()

@@ -55,13 +55,14 @@ object ProfileR17Gates {
     })
 
     def phase(label: String)(body: => Unit): Unit = {
-      // listener events are async; give the bus a moment to drain
-      Thread.sleep(150)
+      // listener events are async: drain the bus so each phase's counts
+      // hold exactly its own jobs
+      org.apache.spark.GraftBus.drain(spark.sparkContext)
       val j0 = jobs; val s0 = stages; val b0 = bytesRead
       val t0 = System.nanoTime()
       body
       val dt = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(150)
+      org.apache.spark.GraftBus.drain(spark.sparkContext)
       println(f"PHASE $label%-34s ${dt}%7.2f s  jobs=${jobs - j0}%3d stages=${stages - s0}%3d read=${(bytesRead - b0) / 1024}%8d KiB")
     }
 
@@ -86,29 +87,8 @@ object ProfileR17Gates {
       }
       traceJobs = sys.env.get("SPARK_GRAFT_TRACE_ALL").contains("1") ||
         (sys.env.get("SPARK_GRAFT_TRACE_JOBS").contains("1") && rep == reps)
-      if (sys.env.get("SPARK_GRAFT_SPLIT_MAINTAIN").contains("1")) {
-        phase("d73.maintain.nTombs") {
-          spark.table(s"${name}_tombs").select(col("doc_id")).distinct().count()
-        }
-        phase("d73.maintain.liveN") {
-          P.statsTable(spark, name).agg(sum(col("n_docs"))).head().getLong(0)
-        }
-        phase("d73.maintain.retire") {
-          P.retireTombstones(spark, name)
-        }
-        phase("d73.maintain.defrag") {
-          P.compactFragmentedBuckets(spark, name, 1)
-        }
-        phase("d73.maintain.coalesce") {
-          Seq(s"${name}_stats", s"${name}_posmarkers", s"${name}_tombs")
-            .filter(spark.catalog.tableExists)
-            .filter(t => graft.sources.Layout.parquetFileCount(spark, t) > 1)
-            .foreach(t => graft.sources.Layout.coalescePlain(spark, t))
-        }
-      } else {
-        phase("d73.maintainIncremental") {
-          P.maintainIncremental(spark, name, maxFilesPerBucket = 1, maxTombstones = 0L)
-        }
+      phase("d73.maintainIncremental") {
+        P.maintainIncremental(spark, name, maxFilesPerBucket = 1, maxTombstones = 0L)
       }
       traceJobs = sys.env.get("SPARK_GRAFT_TRACE_ALL").contains("1")
       phase("d73.bm25TopK.count") {

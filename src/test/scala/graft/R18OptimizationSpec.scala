@@ -17,7 +17,12 @@ import org.apache.spark.sql.functions._
   *    entries (`_`/`.` prefixed) stay ignored;
   *  - the fused guard probes (`liveView`, `requireNotTombstoned`)
   *    must issue ONE directory listing per call — emptiness and the
-  *    broadcast size gate used to pay two listings of the same dir.
+  *    broadcast size gate used to pay two listings of the same dir;
+  *  - `Layout.appendRowDriverSide` types each field from the catalog
+  *    schema (a null is a NULL of its column's type) and refuses a
+  *    value of the wrong class;
+  *  - append, delete and maintain keep their job and listing counts
+  *    per index kind.
   */
 class R18OptimizationSpec extends SparkTestBase {
   import spark.implicits._
@@ -96,5 +101,88 @@ class R18OptimizationSpec extends SparkTestBase {
     assert(Layout.dirListings.get() - b2 === 1L,
       "requireNotTombstoned guard must list the tombs dir exactly once")
     spark.sql(s"DROP TABLE IF EXISTS $name")
+  }
+
+  test("appendRowDriverSide types each field from the catalog schema") {
+    import org.apache.spark.sql.types._
+    val name = freshName("typed")
+    Layout.createEmptyTable(spark, name, s"/tmp/graft_r18opt/$name", StructType(Seq(
+      StructField("id", LongType), StructField("label", StringType))))
+    // a null in a string column is a string NULL, not an INT64 column
+    Layout.appendRowDriverSide(spark, name, Seq("id" -> 1L, "label" -> null))
+    val back = spark.table(name).collect()
+    assert(back.length === 1)
+    assert(back.head.getLong(0) === 1L)
+    assert(back.head.isNullAt(1), "null written into a string column must read back as null")
+    // a Long into a string column is refused before anything is written
+    intercept[IllegalArgumentException](
+      Layout.appendRowDriverSide(spark, name, Seq("id" -> 2L, "label" -> 3L)))
+    assert(spark.table(name).count() === 1L)
+    spark.sql(s"DROP TABLE IF EXISTS $name")
+  }
+
+  test("maintenance cost per kind: jobs and directory listings of append, delete, maintain") {
+    import graft.retrieval.Postings
+    import graft.similarity.Knn
+    val sc = spark.sparkContext
+    val jobsByGroup = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(js.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(g => jobsByGroup.merge(g, 1, (a: Integer, b: Integer) => a + b))
+    }
+    // (jobs, directory listings) of one call, jobs keyed by its own job group
+    def cost(label: String)(body: => Unit): (Int, Long) = {
+      val group = s"${freshName("cost")}_$label"
+      val l0 = Layout.dirListings.get()
+      sc.setJobGroup(group, label)
+      try body finally sc.clearJobGroup()
+      val listings = Layout.dirListings.get() - l0
+      org.apache.spark.GraftBus.drain(sc)
+      (jobsByGroup.getOrDefault(group, 0).intValue, listings)
+    }
+    sc.addSparkListener(listener)
+    try {
+      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+        .select(col("doc_id"), col("text")).filter(col("doc_id") < 40)
+      val pName = freshName("pcost")
+      Postings.writeIndex(docs.filter(col("doc_id") % 2 === 0), "doc_id", "text",
+        pName, s"/tmp/graft_r18opt/$pName", buckets = 4)
+      val postings = Seq(
+        cost("append")(Postings.appendBatch(
+          docs.filter(col("doc_id") % 2 === 1), "doc_id", "text", pName, batchId = 1L)),
+        cost("delete")(Postings.deleteBatch(
+          docs.filter(col("doc_id") % 7 === 3), "doc_id", "text", pName, batchId = 2L)),
+        cost("maintain")(Postings.maintainIncremental(
+          spark, pName, maxFilesPerBucket = 1, maxTombstones = 0L)))
+      Postings.dropIndex(spark, pName)
+
+      val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+        .select(col("vec_id"), col("embedding")).filter(col("vec_id") < 40)
+      val cents = emb.filter(col("vec_id") < 4)
+        .select(col("vec_id").as("c_id"), Knn.asDouble(col("embedding")).as("cv"))
+        .withColumn("cn", sqrt(Knn.dot(col("cv"), col("cv"))))
+      val iName = freshName("icost")
+      Knn.writeIvfIndex(emb.filter(col("vec_id") % 2 === 0), cents, "vec_id", "embedding",
+        iName, s"/tmp/graft_r18opt/$iName", buckets = 4)
+      val ivf = Seq(
+        cost("append")(Knn.appendIvfBatch(
+          emb.filter(col("vec_id") % 2 === 1), "vec_id", "embedding", iName, batchId = 1L)),
+        cost("delete")(Knn.deleteIvfBatch(
+          emb.filter(col("vec_id") % 7 === 3), "vec_id", iName, batchId = 2L,
+          vecCol = Some("embedding"))),
+        cost("maintain")(Knn.maintainIvfIncremental(
+          spark, iName, maxFilesPerBucket = 1, maxTombstones = 0L)))
+      Knn.dropIvfIndex(spark, iName)
+
+      // (jobs, listings) per call, measured on the per-kind maintenance
+      // code before it moved into IndexLifecycle. One exception: postings
+      // maintain listed 11 directories there — its bucket-scoped defrag
+      // listed the tombstone directory even when no bucket was
+      // fragmented; the shared defrag probes it only once a bucket
+      // needs a rewrite, as the IVF side always did
+      assert(postings === Seq((6, 2L), (2, 2L), (19, 10L)), "postings append/delete/maintain")
+      assert(ivf === Seq((3, 2L), (3, 2L), (9, 8L)), "ivf append/delete/maintain")
+    } finally sc.removeSparkListener(listener)
   }
 }
