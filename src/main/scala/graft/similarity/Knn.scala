@@ -247,30 +247,7 @@ object Knn {
     // appends and deletes commit to a (batch_id, kind) marker log
     graft.sources.IndexLifecycle.writeEmptyMarkers(
       corpus.sparkSession, ivfMarkersTableName(name), s"$path/ivfmarkers")
-    writeEmptyIvfTombs(corpus.sparkSession, name, s"$path/ivftombs")
-  }
-
-  /** (Re)create the index's EMPTY tombstone table. Beyond the shared
-    * (vec_id, batch_id) core, IVF tombstones carry a CELL-BUCKET MASK
-    * `cb`: the bucket id of the vector's primary cell, computed at
-    * DELETE time from the batch's own vector under the FROZEN centroid
-    * model — the exact per-row function appends assign with — so
-    * retirement finds its touched buckets from the slim tombstone set
-    * alone, with no trace scan of the ivf table. Nullable: an ids-only
-    * delete writes null and retirement falls back to the trace scan; a
-    * legacy tombstone table lacks the column entirely.
-    */
-  private def writeEmptyIvfTombs(
-      spark: org.apache.spark.sql.SparkSession,
-      name: String,
-      path: String): Unit = {
-    import org.apache.spark.sql.types._
-    graft.sources.Layout.createEmptyTable(
-      spark, ivfTombsTableName(name), path,
-      StructType(Seq(
-        StructField("vec_id", LongType, nullable = false),
-        StructField("batch_id", LongType, nullable = false),
-        StructField("cb", ArrayType(IntegerType, containsNull = true), nullable = true))))
+    graft.sources.IndexLifecycle.writeEmptyTombs(corpus.sparkSession, ivfLayout(name), s"$path/ivftombs")
   }
 
   /** Append a delete batch's tombstone rows. On a mask-capable table
@@ -482,24 +459,186 @@ object Knn {
       .select(col("q_id"), col("cell"), col("n_id"), col("rank"), col("cos"))
   }
 
-  /** The IVF index's layout for the shared maintenance ops: one
-    * cell-bucketed table whose delete-time mask is `cb`, the marker log
-    * as its commit log, the frozen centroid model as a side table the
+  /** The IVF index's layout for the shared lifecycle: one
+    * cell-bucketed table whose delete-time mask is `cb` (the bucket of
+    * the vector's primary cell under the frozen model, so retirement
+    * finds its touched buckets without a trace scan), the marker log as
+    * its commit log, the frozen centroid model as a side table the
     * lifecycle never rewrites (the model IS the index's identity;
     * `retrainIvfIndex` is the explicit migration). Each vector is one
     * row — one cell, one bucket (the `vector_unique` fsck invariant) —
     * which is what lets bucket-scoped defrag retire its tombstones per
-    * bucket and the heavy-fraction policy read a footer bound.
+    * bucket and the heavy-fraction policy read a footer bound. The fsck
+    * watermark records live rows and live distinct ids per bucket; the
+    * distinct count does not add up across files, so a touched bucket
+    * is re-read whole.
     */
   private def ivfLayout(name: String): graft.sources.IndexLifecycle.IndexLayout =
     graft.sources.IndexLifecycle.IndexLayout(
       tombs = ivfTombsTableName(name),
       tombId = "vec_id",
-      bucketed = Seq(graft.sources.IndexLifecycle.BucketedTable(ivfTableName(name), "cell", "n_id", Some("cb"))),
+      bucketed = Seq(graft.sources.IndexLifecycle.BucketedTable(
+        ivfTableName(name), "cell", "n_id", Some("cb"),
+        Some(graft.sources.IndexLifecycle.BucketAgg(count(lit(1)), countDistinct(col("n_id")), additive = false)))),
       plain = Seq(ivfMarkersTableName(name)),
       side = Seq(centsTableName(name)),
+      markerLog = Some(ivfMarkersTableName(name)),
+      fsckFileLog = None,
       liveCount = spark => liveIvf(spark, name).count(),
-      idInOneRow = true)
+      idInOneRow = true,
+      hooks = new IvfKind(name))
+
+  /** What the IVF index adds to the shared fsck and repair.
+    *
+    * Invariants:
+    *
+    *  - `vector_unique` — every live vector appears EXACTLY once (a
+    *    duplicate means a replayed batch re-appended — the marker log's
+    *    job — or an id was re-ingested while tombstoned, the guard's
+    *    job). The incremental check recombines per-bucket rows and
+    *    distinct ids, so it proves uniqueness WITHIN each bucket; a
+    *    duplicate id split across two cell buckets is caught only by the
+    *    full check.
+    *  - `cells_from_model` — every live cell id exists in the frozen
+    *    centroid table (an unknown cell is unreachable by any query's
+    *    assignment: its vectors would silently never retrieve).
+    *  - `norms_consistent` — the stored norm equals sqrt(dot(v, v))
+    *    recomputed, bit-for-bit (assignment and scoring build the
+    *    identical IEEE tree; a drifted norm skews every cosine).
+    *    Both per-row checks run over the live table in the full check
+    *    and over the touched buckets' live rows in the incremental one.
+    *  - `tombstone_mask_covers_trace` — every delete-time cell-bucket
+    *    mask covers its vector's PHYSICAL row: a wrong-vector delete
+    *    writes a wrong mask, retirement under-rewrites, and the vector
+    *    resurfaces when the set clears. fsck may pay the trace scan
+    *    retirement avoids; the incremental check re-runs it whenever the
+    *    tombstone set or the bucket count moved.
+    *
+    * Repairs:
+    *
+    *  - `ivf_rewrite` — in ONE generation rewrite: drifted norms
+    *    recomputed (`nn` is a pure function of `nv`; bit-identity on
+    *    healthy rows), foreign-cell rows re-assigned under the FROZEN
+    *    model (the pure per-row function appends use), duplicate
+    *    vectors collapsed to one per id (deterministic smallest-(cell,
+    *    nn) pick for the corrupted-divergent case).
+    *  - `tombstone_mask_reset` — after the rewrite, which can itself
+    *    move a row's bucket: NULL the offending vectors' masks, so
+    *    retirement distrusts the mask set and falls back to the
+    *    always-correct trace scan.
+    */
+  private final class IvfKind(name: String) extends graft.sources.IndexLifecycle.KindHooks {
+
+    override def fsck(
+        spark: org.apache.spark.sql.SparkSession,
+        scope: Option[graft.sources.IndexLifecycle.FsckScope]): Seq[graft.sources.IndexLifecycle.Finding] = {
+      val (unique, rows, masksMoved) = scope match {
+        case None =>
+          val live = liveIvf(spark, name)
+          val r = live.agg(count(lit(1)), countDistinct(col("n_id"))).head()
+          (("vector_unique", r.getLong(0) == r.getLong(1), s"rows=${r.getLong(0)} distinct=${r.getLong(1)}"),
+            Some(live), true)
+        case Some(s) =>
+          val ivf = s.table(ivfTableName(name)).get
+          val (c, d) = ivf.totals
+          (("vector_unique", c == d,
+            s"rows=$c per-bucket-distinct=$d (intra-bucket form; a cross-bucket " +
+              "duplicate id is caught by the full pass)"),
+            ivf.rewritten, s.tombsChanged || ivf.rebucketed)
+      }
+      val perRow = rows match {
+        case None =>
+          Seq(("cells_from_model", true, "no touched buckets"), ("norms_consistent", true, "no touched buckets"))
+        case Some(live) =>
+          val unknown = live.select(col("cell")).distinct()
+            .join(ivfCentroids(spark, name).select(col("c_id").as("cell")), Seq("cell"), "left_anti")
+            .count()
+          val badNorms = driftedNorms(live).count()
+          Seq(
+            ("cells_from_model", unknown == 0, s"$unknown cells missing from the centroid model"),
+            ("norms_consistent", badNorms == 0, s"$badNorms stored norms diverge from recompute"))
+      }
+      val masks = if (!masksMoved) None else maskMisses(spark).map { bad =>
+        val n = bad.count()
+        ("tombstone_mask_covers_trace", n == 0, s"$n tombstoned rows outside their delete-time cell-bucket mask")
+      }
+      (unique +: perRow) ++ masks
+    }
+
+    override def repairs(spark: org.apache.spark.sql.SparkSession): Seq[graft.sources.IndexLifecycle.Finding] = {
+      val rewrite = rewriteRows(spark)
+      rewrite +: (if (tombsMasked(spark)) Seq(resetMasks(spark)) else Nil)
+    }
+
+    private def driftedNorms(rows: DataFrame): DataFrame =
+      rows.filter(col("nn") =!= sqrt(dot(col("nv"), col("nv"))))
+
+    private def tombsMasked(spark: org.apache.spark.sql.SparkSession): Boolean =
+      spark.catalog.tableExists(ivfTombsTableName(name)) &&
+        spark.table(ivfTombsTableName(name)).columns.contains("cb")
+
+    /** The ids of tombstoned vectors whose delete-time mask misses the
+      * bucket their row physically sits in; None when no tombstone
+      * carries a mask.
+      */
+    private def maskMisses(spark: org.apache.spark.sql.SparkSession): Option[DataFrame] = {
+      val tombsT = ivfTombsTableName(name)
+      if (!tombsMasked(spark)) return None
+      val masked = spark.table(tombsT).filter(col("cb").isNotNull)
+        .select(col("vec_id").as("n_id"), col("cb"))
+      if (masked.isEmpty) None
+      else {
+        val nb = graft.sources.Layout.numBuckets(spark, ivfTableName(name))
+        Some(ivfTable(spark, name)
+          .select(col("n_id"), graft.sources.Layout.bucketIdExpr(col("cell"), nb).as("b"))
+          .join(graft.sources.IndexLifecycle.maybeBroadcast(spark, tombsT, masked), Seq("n_id"))
+          .filter(!array_contains(col("cb"), col("b")))
+          .select(col("n_id")))
+      }
+    }
+
+    private def rewriteRows(spark: org.apache.spark.sql.SparkSession): graft.sources.IndexLifecycle.Finding = {
+      val raw   = ivfTable(spark, name)
+      val cents = broadcast(ivfCentroids(spark, name).select(col("c_id").as("cell")))
+      val badNorms = driftedNorms(raw).count()
+      val foreign  = raw.join(cents, Seq("cell"), "left_anti").count()
+      val stats = raw.agg(count(lit(1)), countDistinct(col("n_id"))).head()
+      val dups  = stats.getLong(0) - stats.getLong(1)
+      if (badNorms == 0 && foreign == 0 && dups == 0)
+        ("ivf_rewrite", false, "norms, cells and uniqueness all consistent")
+      else {
+        // one pass, one rewrite: recompute norms (identity on healthy
+        // rows), re-assign only the foreign-cell rows, dedupe by id
+        val meta = spark.sessionState.catalog.getTableMetadata(
+          spark.sessionState.sqlParser.parseTableIdentifier(ivfTableName(name)))
+        val fixed = spark.read.schema(meta.schema).parquet(meta.location.toString)
+          .withColumn("nn", sqrt(dot(col("nv"), col("nv"))))
+        val known = fixed.join(cents, Seq("cell"), "left_semi")
+        val reassigned = assignCells(
+          fixed.join(cents, Seq("cell"), "left_anti").select(col("n_id"), col("nv").as("v"), col("nn").as("nrm")),
+          ivfCentroids(spark, name), "n_id")
+          .select(col("cell"), col("n_id"), col("v").as("nv"), col("nrm").as("nn"))
+        val w = Window.partitionBy(col("n_id")).orderBy(col("cell"), col("nn"))
+        val deduped = known.select(col("cell"), col("n_id"), col("nv"), col("nn"))
+          .unionByName(reassigned)
+          .withColumn("rn", row_number().over(w)).filter(col("rn") === 1).drop("rn")
+        graft.sources.Layout.compact(spark, ivfTableName(name), _ => deduped)
+        ("ivf_rewrite", true,
+          s"$badNorms drifted norms recomputed, $foreign foreign-cell rows re-assigned, $dups duplicates dropped")
+      }
+    }
+
+    private def resetMasks(spark: org.apache.spark.sql.SparkSession): graft.sources.IndexLifecycle.Finding = {
+      val bad = maskMisses(spark).map(_.distinct().collect().map(_.getLong(0)).toSeq).getOrElse(Nil)
+      if (bad.isEmpty) ("tombstone_mask_reset", false, "tombstone masks cover every trace")
+      else {
+        graft.sources.Layout.rewritePlain(spark, ivfTombsTableName(name))(
+          _.withColumn("cb", when(col("vec_id").isin(bad: _*), lit(null).cast("array<int>")).otherwise(col("cb"))))
+        ("tombstone_mask_reset", true,
+          s"${bad.size} vectors' delete-time masks nulled — retirement will trace-scan")
+      }
+    }
+  }
 
   /** Compaction policy: see `IndexLifecycle.compactIfFragmented`. */
   def compactIvfIfFragmented(
@@ -551,28 +690,6 @@ object Knn {
   def ivfCentroids(spark: org.apache.spark.sql.SparkSession, name: String): DataFrame =
     spark.table(centsTableName(name))
 
-  /** Rewrite the IVF table's generation with `rows` (same bucket spec,
-    * same swap discipline as every rewrite) — shared by repair and
-    * retrain, whose rows are derived rather than the table's own.
-    */
-  private def rewriteIvf(
-      spark: org.apache.spark.sql.SparkSession,
-      name: String,
-      rows: DataFrame): Unit = {
-    val table = ivfTableName(name)
-    graft.sources.Layout.recoverDanglingSwap(spark, table)
-    graft.sources.Layout.recoverBucketCompact(spark, table)
-    val meta = spark.sessionState.catalog.getTableMetadata(
-      spark.sessionState.sqlParser.parseTableIdentifier(table))
-    val buckets = meta.bucketSpec.getOrElse(
-      throw new IllegalArgumentException(s"$table has no bucket spec")).numBuckets
-    graft.sources.Layout.swapGeneration(spark, table, meta) { (scratch, newDir) =>
-      graft.sources.Layout.bucketize(
-        rows.repartition(buckets, rows("cell")),
-        scratch, newDir, Seq("cell"), buckets)
-    }
-  }
-
   /** Bucket-count growth policy; see `IndexLifecycle.rebucketIfOvergrown`. */
   def rebucketIvfIfOvergrown(
       spark: org.apache.spark.sql.SparkSession,
@@ -606,127 +723,12 @@ object Knn {
       newBuckets: Int): Unit =
     graft.sources.IndexLifecycle.rebucket(spark, ivfLayout(name), newBuckets)
 
-  /** fsck that HEALS, vector side (VERDICT r14 #3): map each red
-    * `checkIvfIndex` row to a repair derived from the index and the
-    * frozen model, apply it in ONE generation rewrite, and report
-    * `(repair, applied, detail)` rows. Derivations:
-    *
-    *  - **drifted norms** (`norms_consistent` red): `nn` is a pure
-    *    function of `nv` — recompute `sqrt(dot(nv, nv))`, the identical
-    *    IEEE tree assignment and scoring build (bit-identity on healthy
-    *    rows, so the rewrite is a no-op for them).
-    *  - **foreign cells** (`cells_from_model` red): a cell absent from
-    *    the centroid table is unreachable by any query's assignment —
-    *    re-assign those rows under the FROZEN model (`assignCells`,
-    *    the same pure per-row function appends use).
-    *  - **duplicate vectors** (`vector_unique` red): replays that
-    *    bypassed the marker log write byte-identical rows — keep one
-    *    per id (deterministic smallest-(cell, nn) pick for the
-    *    corrupted-divergent case).
-    *  - **duplicated markers** (`marker_log_unique` red): collapse to
-    *    one row per (batch_id, kind), as in `Postings.repairIndex`.
-    *  - **wrong/stale delete-time masks**
-    *    (`tombstone_mask_covers_trace` red): NULL the offending
-    *    vectors' masks so retirement distrusts the set and falls back
-    *    to the always-correct trace scan — run after the ivf rewrite,
-    *    which can itself move a row's bucket (foreign-cell
-    *    re-assignment) and stale a previously-correct mask.
+  /** fsck that HEALS: the journal replay, the IVF repairs (`IvfKind`)
+    * and the marker-log dedup, one `(repair, applied, detail)` row
+    * each. See `IndexLifecycle.repair`.
     */
-  def repairIvfIndex(spark: org.apache.spark.sql.SparkSession, name: String): DataFrame = {
-    import spark.implicits._
-    val out = scala.collection.mutable.ArrayBuffer[(String, Boolean, String)]()
-    // crashed bucket compaction FIRST — the rewrite below derives from
-    // table state, which a mid-swap file set would corrupt, not heal
-    val jReplayed = graft.sources.Layout.recoverBucketCompact(spark, ivfTableName(name))
-    out += (("bucket_journal_replay", jReplayed,
-      if (jReplayed) s"journal replayed to convergence: ${ivfTableName(name)}"
-      else "no pending bucket-compaction journal"))
-    val raw   = ivfTable(spark, name)
-    val cents = ivfCentroids(spark, name)
-    val badNorms = raw.filter(col("nn") =!= sqrt(dot(col("nv"), col("nv")))).count()
-    val foreign = raw
-      .join(broadcast(cents.select(col("c_id").as("cell"))), Seq("cell"), "left_anti").count()
-    val stats = raw.agg(count(lit(1)), countDistinct(col("n_id"))).head()
-    val dups  = stats.getLong(0) - stats.getLong(1)
-    if (badNorms == 0 && foreign == 0 && dups == 0) {
-      out += (("ivf_rewrite", false, "norms, cells and uniqueness all consistent"))
-    } else {
-      // one pass, one rewrite: recompute norms (identity on healthy
-      // rows), re-assign only the foreign-cell rows, dedupe by id
-      val meta = spark.sessionState.catalog.getTableMetadata(
-        spark.sessionState.sqlParser.parseTableIdentifier(ivfTableName(name)))
-      val fixed = spark.read.schema(meta.schema).parquet(meta.location.toString)
-        .withColumn("nn", sqrt(dot(col("nv"), col("nv"))))
-      val known = fixed.join(
-        broadcast(cents.select(col("c_id").as("cell"))), Seq("cell"), "left_semi")
-      val reassigned = assignCells(
-        fixed.join(broadcast(cents.select(col("c_id").as("cell"))), Seq("cell"), "left_anti")
-          .select(col("n_id"), col("nv").as("v"), col("nn").as("nrm")),
-        cents, "n_id")
-        .select(col("cell"), col("n_id"), col("v").as("nv"), col("nrm").as("nn"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("n_id")).orderBy(col("cell"), col("nn"))
-      val deduped = known.select(col("cell"), col("n_id"), col("nv"), col("nn"))
-        .unionByName(reassigned)
-        .withColumn("rn", row_number().over(w)).filter(col("rn") === 1).drop("rn")
-      rewriteIvf(spark, name, deduped)
-      out += (("ivf_rewrite", true,
-        s"$badNorms drifted norms recomputed, $foreign foreign-cell rows re-assigned, $dups duplicates dropped"))
-    }
-    // stale/wrong delete-time masks (r15): runs AFTER the ivf rewrite —
-    // a foreign-cell re-assignment above changes the row's bucket, so a
-    // previously-correct mask can go stale in the same repair pass.
-    // The heal is derived, conservative, and retirement-safe: NULL the
-    // offending vectors' masks, so retireIvfTombstones distrusts the
-    // mask set and falls back to the always-correct trace scan.
-    val tombsT = ivfTombsTableName(name)
-    if (spark.catalog.tableExists(tombsT) && spark.table(tombsT).columns.contains("cb")) {
-      val masked = spark.table(tombsT).filter(col("cb").isNotNull)
-        .select(col("vec_id").as("n_id"), col("cb"))
-      val badIds: Seq[Long] =
-        if (masked.isEmpty) Nil
-        else {
-          val nb = graft.sources.Layout.numBuckets(spark, ivfTableName(name))
-          ivfTable(spark, name)
-            .select(col("n_id"), graft.sources.Layout.bucketIdExpr(col("cell"), nb).as("b"))
-            .join(graft.sources.IndexLifecycle.maybeBroadcast(spark, tombsT, masked), Seq("n_id"))
-            .filter(!array_contains(col("cb"), col("b")))
-            .select(col("n_id")).distinct().collect().map(_.getLong(0)).toSeq
-        }
-      if (badIds.nonEmpty) {
-        graft.sources.Layout.recoverDanglingSwap(spark, tombsT)
-        val meta = spark.sessionState.catalog.getTableMetadata(
-          spark.sessionState.sqlParser.parseTableIdentifier(tombsT))
-        val healed = spark.read.schema(meta.schema).parquet(meta.location.toString)
-          .withColumn(
-            "cb",
-            when(col("vec_id").isin(badIds: _*), lit(null).cast("array<int>"))
-              .otherwise(col("cb")))
-        graft.sources.Layout.swapGeneration(spark, tombsT, meta) { (scratch, newDir) =>
-          healed.write.mode("overwrite").option("path", newDir).saveAsTable(scratch)
-        }
-        out += (("tombstone_mask_reset", true,
-          s"${badIds.size} vectors' delete-time masks nulled — retirement will trace-scan"))
-      } else out += (("tombstone_mask_reset", false, "tombstone masks cover every trace"))
-    }
-    if (spark.catalog.tableExists(ivfMarkersTableName(name))) {
-      val table = ivfMarkersTableName(name)
-      val mdups = spark.table(table)
-        .groupBy(col("batch_id"), col("kind"))
-        .agg(count(lit(1)).as("c")).filter(col("c") > 1).count()
-      if (mdups > 0) {
-        graft.sources.Layout.recoverDanglingSwap(spark, table)
-        val meta = spark.sessionState.catalog.getTableMetadata(
-          spark.sessionState.sqlParser.parseTableIdentifier(table))
-        val deduped = spark.read.schema(meta.schema).parquet(meta.location.toString).distinct()
-        graft.sources.Layout.swapGeneration(spark, table, meta) { (scratch, newDir) =>
-          deduped.write.mode("overwrite").option("path", newDir).saveAsTable(scratch)
-        }
-        out += (("marker_dedup", true, s"$mdups duplicated (batch_id, kind) markers collapsed"))
-      } else out += (("marker_dedup", false, "marker log unique"))
-    }
-    out.toSeq.toDF("repair", "applied", "detail")
-  }
+  def repairIvfIndex(spark: org.apache.spark.sql.SparkSession, name: String): DataFrame =
+    graft.sources.IndexLifecycle.repair(spark, ivfLayout(name))
 
   /** MODEL-REFRESH migration (VERDICT r14 #4) — un-freeze the centroid
     * model safely: re-assign every LIVE vector under `newCentroids`
@@ -762,278 +764,27 @@ object Knn {
       liveIvf(spark, name).select(col("n_id"), col("nv").as("v"), col("nn").as("nrm")),
       newCentroids, "n_id")
       .select(col("cell"), col("n_id"), col("v").as("nv"), col("nrm").as("nn"))
-    rewriteIvf(spark, name, reassigned)
+    graft.sources.Layout.compact(spark, ivfTableName(name), _ => reassigned)
     // model swap second (see crash-window note above)
-    val centsTable = centsTableName(name)
-    graft.sources.Layout.recoverDanglingSwap(spark, centsTable)
-    val centsMeta = spark.sessionState.catalog.getTableMetadata(
-      spark.sessionState.sqlParser.parseTableIdentifier(centsTable))
-    graft.sources.Layout.swapGeneration(spark, centsTable, centsMeta) { (scratch, newDir) =>
-      newCentroids.write.mode("overwrite").option("path", newDir).saveAsTable(scratch)
-    }
+    graft.sources.Layout.rewritePlain(spark, centsTableName(name))(_ => newCentroids)
     if (tombsWere)
       graft.sources.IndexLifecycle.clearTombs(spark, ivfTombsTableName(name), "vec_id")
   }
 
-  /** Maintenance CONSISTENCY CHECK for the IVF index — the vector
-    * twin of `Postings.checkIndex` (run at rest; one row per check):
-    *
-    *  - `vector_unique` — every live vector appears EXACTLY once
-    *    (each corpus vector lives in one primary cell; a duplicate
-    *    means a replayed batch re-appended — the marker log's job —
-    *    or an id was re-ingested while tombstoned, the guard's job).
-    *  - `cells_from_model` — every live cell id exists in the frozen
-    *    centroid table (an unknown cell is unreachable by any query's
-    *    assignment: its vectors would silently never retrieve).
-    *  - `norms_consistent` — the stored norm equals sqrt(dot(v, v))
-    *    recomputed, bit-for-bit (assignment and scoring build the
-    *    identical IEEE tree; a drifted norm skews every cosine).
-    *  - `marker_log_unique` — replay markers unique per
-    *    (batch_id, kind).
+  /** Maintenance consistency check (fsck), run at rest: the IVF
+    * invariants (`IvfKind`) over every live row plus the rows every
+    * index has. See `IndexLifecycle.check`.
     */
-  def checkIvfIndex(spark: org.apache.spark.sql.SparkSession, name: String): DataFrame = {
-    import spark.implicits._
-    val checks = scala.collection.mutable.ArrayBuffer[(String, Boolean, String)]()
-    val live = liveIvf(spark, name)
-    val r = live.agg(count(lit(1)).as("c"), countDistinct(col("n_id")).as("d")).head()
-    val (cnt, dcnt) = (r.getLong(0), r.getLong(1))
-    checks += (("vector_unique", cnt == dcnt, s"rows=$cnt distinct=$dcnt"))
-    val unknown = live.select(col("cell")).distinct()
-      .join(ivfCentroids(spark, name).select(col("c_id").as("cell")), Seq("cell"), "left_anti")
-      .count()
-    checks += (("cells_from_model", unknown == 0, s"$unknown cells missing from the centroid model"))
-    val badNorms = live.filter(col("nn") =!= sqrt(dot(col("nv"), col("nv")))).count()
-    checks += (("norms_consistent", badNorms == 0, s"$badNorms stored norms diverge from recompute"))
-    // delete-time cell-bucket masks (r15) must cover every PHYSICAL
-    // trace of their vector — a wrong-vector delete writes a wrong
-    // mask, retirement under-rewrites, and the vector resurrects when
-    // the set clears. This is the fsck that makes that caller-contract
-    // edge DETECTABLE before retirement runs (fsck is allowed the
-    // trace scan retirement avoids); repairIvfIndex heals by nulling
-    // the bad masks so retirement falls back to the trace scan.
-    val tombsT = ivfTombsTableName(name)
-    if (spark.catalog.tableExists(tombsT) && spark.table(tombsT).columns.contains("cb")) {
-      val masked = spark.table(tombsT).filter(col("cb").isNotNull)
-        .select(col("vec_id").as("n_id"), col("cb"))
-      if (!masked.isEmpty) {
-        val nb = graft.sources.Layout.numBuckets(spark, ivfTableName(name))
-        val bad = ivfTable(spark, name)
-          .select(col("n_id"), graft.sources.Layout.bucketIdExpr(col("cell"), nb).as("b"))
-          .join(graft.sources.IndexLifecycle.maybeBroadcast(spark, tombsT, masked), Seq("n_id"))
-          .filter(!array_contains(col("cb"), col("b")))
-          .count()
-        checks += (("tombstone_mask_covers_trace", bad == 0,
-          s"$bad tombstoned rows outside their delete-time cell-bucket mask"))
-      }
-    }
-    if (spark.catalog.tableExists(ivfMarkersTableName(name))) {
-      val dups = spark.table(ivfMarkersTableName(name))
-        .groupBy(col("batch_id"), col("kind"))
-        .agg(count(lit(1)).as("c")).filter(col("c") > 1).count()
-      checks += (("marker_log_unique", dups == 0, s"$dups duplicated (batch_id, kind) markers"))
-    }
-    // generation hygiene (round 15) — see Postings.checkIndex: the
-    // immediate previous generation is legal reader-safe retention,
-    // anything older is a leak
-    val leaks = Seq(
-      ivfTableName(name), centsTableName(name),
-      ivfMarkersTableName(name), ivfTombsTableName(name))
-      .filter(spark.catalog.tableExists)
-      .flatMap(t => graft.sources.Layout.danglingGenerations(spark, t).map(d => s"$t -> $d"))
-    checks += (("dangling_generation", leaks.isEmpty,
-      if (leaks.isEmpty) "retention bounded at one generation" else leaks.mkString("; ")))
-    // crashed bucket compaction — see Postings.checkIndex
-    val pendingJ =
-      if (graft.sources.Layout.pendingBucketJournal(spark, ivfTableName(name)))
-        Seq(ivfTableName(name))
-      else Nil
-    checks += (("bucket_journal_pending", pendingJ.isEmpty,
-      if (pendingJ.isEmpty) "no pending bucket-compaction journal"
-      else s"committed journal awaiting replay: ${pendingJ.mkString(", ")}"))
-    checks.toSeq.toDF("check", "ok", "detail")
-  }
+  def checkIvfIndex(spark: org.apache.spark.sql.SparkSession, name: String): DataFrame =
+    graft.sources.IndexLifecycle.check(spark, ivfLayout(name))
 
-  // ---------- incremental fsck, vector side (round 17 — VERDICT r16 #1) ----------
-
-  /** Per-bucket (live rows, live distinct ids) over the whole ivf
-    * table — a vector lives in exactly one cell, so one cell bucket,
-    * and the counts recombine per bucket.
+  /** Maintenance-cadence fsck: `checkIvfIndex` scoped to the cell
+    * buckets touched since the last green check, with a periodic full
+    * `checkIvfIndex` for what the file watermark trusts. See
+    * `IndexLifecycle.checkIncremental`.
     */
-  private def perBucketIvfAgg(
-      spark: org.apache.spark.sql.SparkSession, name: String): Map[Int, (Long, Long)] = {
-    val nb = graft.sources.Layout.numBuckets(spark, ivfTableName(name))
-    liveIvf(spark, name)
-      .groupBy(graft.sources.Layout.bucketIdExpr(col("cell"), nb).as("b"))
-      .agg(count(lit(1)).as("c"), countDistinct(col("n_id")).as("d"))
-      .collect().map(r => r.getInt(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-  }
-
-  private def liveIvfOfBuckets(
-      spark: org.apache.spark.sql.SparkSession,
-      name: String,
-      bucketIds: Set[Int]): Option[DataFrame] = {
-    val files = graft.sources.Layout.bucketFiles(spark, ivfTableName(name), bucketIds)
-    if (files.isEmpty) None
-    else {
-      val meta = spark.sessionState.catalog.getTableMetadata(
-        spark.sessionState.sqlParser.parseTableIdentifier(ivfTableName(name)))
-      Some(graft.sources.IndexLifecycle.liveView(
-        spark, ivfTombsTableName(name), "vec_id",
-        spark.read.schema(meta.schema).parquet(files: _*), "n_id"))
-    }
-  }
-
-  private def computeIvfFsckMark(
-      spark: org.apache.spark.sql.SparkSession, name: String): graft.sources.FsckWatermark.Mark = {
-    import graft.sources.FsckWatermark.{BucketMark, Mark, TableMark}
-    val ivfT = ivfTableName(name)
-    val (nb, files) = graft.sources.FsckWatermark.bucketFileSets(spark, ivfT)
-    val agg = perBucketIvfAgg(spark, name)
-    Mark(
-      graft.sources.FsckWatermark.plainFp(spark, ivfTombsTableName(name)),
-      Set.empty,
-      Map(ivfT -> TableMark(nb, files.map { case (b, fs) =>
-        val (c, d) = agg.getOrElse(b, (0L, 0L))
-        b -> BucketMark(fs, c, d)
-      })))
-  }
-
-  /** Maintenance-cadence fsck, vector side — `checkIvfIndex` scoped to
-    * the cell buckets touched since the last green check (see
-    * `Postings.checkIndexIncremental` for the watermark protocol and
-    * the trust boundary; the runbook keeps a periodic full pass).
-    * Scoping here is even cleaner than the postings side: every
-    * invariant except marker/mask hygiene is per-row (`norms_consistent`,
-    * `cells_from_model`) or per-bucket-recombining (`vector_unique` —
-    * with one documented narrowing: the incremental form proves
-    * uniqueness WITHIN each bucket and recombines counts, so a
-    * duplicate id split across two different cell buckets is caught
-    * only by the full pass). The delete-time-mask check runs whenever
-    * the tombstone table changed since the watermark (it is
-    * tombstone-set-sized); a changed set also invalidates the recorded
-    * live counts, which then recompute corpus-wide, column-pruned.
-    */
-  def checkIvfIndexIncremental(
-      spark: org.apache.spark.sql.SparkSession, name: String): DataFrame = {
-    import spark.implicits._
-    import graft.sources.FsckWatermark
-    val ivfT = ivfTableName(name)
-    val wmPath = FsckWatermark.path(spark, ivfT)
-    FsckWatermark.read(spark, wmPath) match {
-      case None =>
-        val full  = checkIvfIndex(spark, name)
-        val rows  = full.collect().map(r => (r.getString(0), r.getBoolean(1), r.getString(2)))
-        val green = rows.forall(_._2)
-        if (green)
-          FsckWatermark.write(spark, wmPath, computeIvfFsckMark(spark, name))
-        val scope = (
-          "fsck_scope", true,
-          "full: no (or unreadable) watermark — ran checkIvfIndex" +
-            (if (green) "; watermark recorded" else "; RED result, watermark NOT recorded"))
-        (rows :+ scope).toSeq.toDF("check", "ok", "detail")
-      case Some(old) =>
-        val checks = scala.collection.mutable.ArrayBuffer[(String, Boolean, String)]()
-        val tombsT = ivfTombsTableName(name)
-        val curTombsFp   = FsckWatermark.plainFp(spark, tombsT)
-        val tombsChanged = curTombsFp != old.tombsFp
-        val (nb, files)  = FsckWatermark.bucketFileSets(spark, ivfT)
-        // bucket-granular on the vector side BY CHOICE: a vector lives
-        // in exactly one cell bucket, so an append touches one bucket
-        // per distinct cell (not most buckets, as terms do), and
-        // whole-bucket recompute is also what makes the intra-bucket
-        // uniqueness check sound across old+new files
-        val touched: Set[Int] = old.tables.get(ivfT)
-          .map(FsckWatermark.diff(_, nb, files).touched).getOrElse(files.keySet)
-        val touchedLive: Option[DataFrame] =
-          if (touched.isEmpty) None else liveIvfOfBuckets(spark, name, touched)
-
-        val agg: Map[Int, (Long, Long)] =
-          if (tombsChanged || !old.tables.contains(ivfT)) perBucketIvfAgg(spark, name)
-          else {
-            val recomputed: Map[Int, (Long, Long)] = touchedLive match {
-              case None => Map.empty
-              case Some(live) =>
-                live.groupBy(graft.sources.Layout.bucketIdExpr(col("cell"), nb).as("b"))
-                  .agg(count(lit(1)).as("c"), countDistinct(col("n_id")).as("d"))
-                  .collect().map(r => r.getInt(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-            }
-            old.tables(ivfT).buckets.view.filterKeys(b => !touched.contains(b))
-              .map { case (b, m) => b -> ((m.a1, m.a2)) }.toMap ++
-              touched.iterator.map(b => b -> recomputed.getOrElse(b, (0L, 0L))).toMap
-          }
-        val cnt  = agg.valuesIterator.map(_._1).sum
-        val dcnt = agg.valuesIterator.map(_._2).sum
-        checks += (("vector_unique", cnt == dcnt,
-          s"rows=$cnt per-bucket-distinct=$dcnt (intra-bucket form; a cross-bucket " +
-            "duplicate id is caught by the full pass)"))
-        touchedLive match {
-          case None =>
-            checks += (("cells_from_model", true, "no touched buckets"))
-            checks += (("norms_consistent", true, "no touched buckets"))
-          case Some(live) =>
-            val unknown = live.select(col("cell")).distinct()
-              .join(
-                ivfCentroids(spark, name).select(col("c_id").as("cell")),
-                Seq("cell"), "left_anti")
-              .count()
-            checks += (("cells_from_model", unknown == 0,
-              s"$unknown touched-bucket cells missing from the centroid model"))
-            val badNorms = live.filter(col("nn") =!= sqrt(dot(col("nv"), col("nv")))).count()
-            checks += (("norms_consistent", badNorms == 0,
-              s"$badNorms touched-bucket stored norms diverge from recompute"))
-        }
-        // delete-time mask coverage re-verifies whenever the tombstone
-        // set moved (tombstone-set-sized; a green watermark already
-        // covered the unchanged set)
-        if ((tombsChanged || old.tables.get(ivfT).exists(_.numBuckets != nb)) &&
-          spark.catalog.tableExists(tombsT) && spark.table(tombsT).columns.contains("cb")) {
-          val masked = spark.table(tombsT).filter(col("cb").isNotNull)
-            .select(col("vec_id").as("n_id"), col("cb"))
-          if (!masked.isEmpty) {
-            val bad = ivfTable(spark, name)
-              .select(col("n_id"), graft.sources.Layout.bucketIdExpr(col("cell"), nb).as("b"))
-              .join(graft.sources.IndexLifecycle.maybeBroadcast(spark, tombsT, masked), Seq("n_id"))
-              .filter(!array_contains(col("cb"), col("b")))
-              .count()
-            checks += (("tombstone_mask_covers_trace", bad == 0,
-              s"$bad tombstoned rows outside their delete-time cell-bucket mask"))
-          }
-        }
-        if (spark.catalog.tableExists(ivfMarkersTableName(name))) {
-          val dups = spark.table(ivfMarkersTableName(name))
-            .groupBy(col("batch_id"), col("kind"))
-            .agg(count(lit(1)).as("c")).filter(col("c") > 1).count()
-          checks += (("marker_log_unique", dups == 0,
-            s"$dups duplicated (batch_id, kind) markers"))
-        }
-        val leaks = Seq(ivfT, centsTableName(name), ivfMarkersTableName(name), tombsT)
-          .filter(spark.catalog.tableExists)
-          .flatMap(t => graft.sources.Layout.danglingGenerations(spark, t).map(d => s"$t -> $d"))
-        checks += (("dangling_generation", leaks.isEmpty,
-          if (leaks.isEmpty) "retention bounded at one generation" else leaks.mkString("; ")))
-        val pendingJ = graft.sources.Layout.pendingBucketJournal(spark, ivfT)
-        checks += (("bucket_journal_pending", !pendingJ,
-          if (!pendingJ) "no pending bucket-compaction journal"
-          else s"committed journal awaiting replay: $ivfT"))
-
-        val green = checks.forall(_._2)
-        if (green) {
-          import FsckWatermark.{BucketMark, Mark, TableMark}
-          FsckWatermark.write(
-            spark, wmPath,
-            Mark(curTombsFp, Set.empty, Map(ivfT -> TableMark(nb, files.map { case (b, fs) =>
-              val (c, d) = agg.getOrElse(b, (0L, 0L))
-              b -> BucketMark(fs, c, d)
-            }))))
-        }
-        checks += (("fsck_scope", true,
-          s"incremental: ${touched.size}/$nb cell buckets touched; " +
-            s"tombstones ${if (tombsChanged) "CHANGED (live counts recomputed corpus-wide)" else "unchanged"}; " +
-            (if (green) "watermark advanced" else "RED result — watermark NOT advanced") +
-            "; fingerprint-evading corruption in untouched buckets needs the periodic full checkIvfIndex"))
-        checks.toSeq.toDF("check", "ok", "detail")
-    }
-  }
+  def checkIvfIndexIncremental(spark: org.apache.spark.sql.SparkSession, name: String): DataFrame =
+    graft.sources.IndexLifecycle.checkIncremental(spark, ivfLayout(name))
 
   def dropIvfIndex(spark: org.apache.spark.sql.SparkSession, name: String): Unit =
     graft.sources.IndexLifecycle.drop(spark, ivfLayout(name))

@@ -4,33 +4,31 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
 /** Persisted state of the last GREEN consistency check — what makes
-  * `Postings.checkIndexIncremental` / `Knn.checkIvfIndexIncremental`
-  * possible (round 17 — VERDICT r16 #1: `checkIndex` was the last
-  * maintenance operation still paying full-index cost every run; the
-  * r16 fsck ladder measured it per-row past the page cache, i.e. a
-  * full scan per maintenance window at 100 TB).
+  * `IndexLifecycle.checkIncremental` possible: a full check pays
+  * full-index cost every run, a full scan per maintenance window at
+  * 100 TB.
   *
-  * The watermark records, per bucketed table, each bucket's FILE SET
-  * (name + length + mtime of every parquet file) plus the per-bucket
-  * aggregates the global invariants decompose over (live Σtf and live
-  * row counts — per-bucket because a term lives entirely in its hash
-  * bucket and a doc's forward row in its doc bucket, so per-bucket
-  * sums recombine exactly). The file-level diff matters: an append
-  * touches most TERM buckets of a posting index (any real document
-  * carries diverse terms), so a bucket-granular "re-verify touched
-  * buckets" would re-read nearly the whole index every window. With
-  * file sets the diff classifies each bucket as
+  * The watermark records, per watermarked bucketed table, each
+  * bucket's FILE SET (name + length + mtime of every parquet file) plus
+  * the per-bucket aggregates the global invariants decompose over
+  * (e.g. live Σtf and live row counts — per-bucket because a term lives
+  * entirely in its hash bucket and a doc's forward row in its doc
+  * bucket, so per-bucket sums recombine exactly). The file-level diff
+  * matters: an append touches most TERM buckets of a posting index
+  * (any real document carries diverse terms), so a bucket-granular
+  * "re-verify touched buckets" would re-read nearly the whole index
+  * every window. With file sets the diff classifies each bucket as
   *
   *   - UNCHANGED (same files) — recorded aggregates reused;
-  *   - ADDED-ONLY (old files all still present) — aggregates are
-  *     ADDITIVE over the new files alone: cost tracks appended bytes;
+  *   - ADDED-ONLY (old files all still present) — additive aggregates
+  *     come from the new files alone: cost tracks appended bytes;
   *   - REWRITTEN (any old file gone) — full bucket recompute, which is
   *     exactly the byte count the rewrite itself just paid.
   *
   * The trust boundary is the file fingerprint: corruption that
   * replaces bytes while preserving a file's (name, length, mtime) is
   * invisible to the incremental pass BY DESIGN and is the reason the
-  * runbook keeps a periodic FULL `checkIndex` (spec-pinned in
+  * runbook keeps a periodic FULL check (spec-pinned in
   * IncrementalFsckSpec — an injected fingerprint-evading corruption
   * stays green incrementally and goes red on the next full pass).
   *
@@ -45,9 +43,7 @@ import org.apache.spark.sql.SparkSession
 private[graft] object FsckWatermark {
 
   /** One bucket at the last green check: its file fingerprints + two
-    * table-specific aggregate slots (postings: a1 = live Σtf, a2 =
-    * live row count; forward: a1 = live row count; ivf: a1 = live row
-    * count, a2 = live distinct ids).
+    * table-specific aggregate slots (`IndexLifecycle.BucketAgg`).
     */
   case class BucketMark(files: Set[String], a1: Long, a2: Long)
   case class TableMark(numBuckets: Int, buckets: Map[Int, BucketMark])
@@ -56,11 +52,12 @@ private[graft] object FsckWatermark {
     * LIVE aggregates embed the tombstone anti-join, so any change to
     * the set invalidates the decomposition (the incremental check then
     * recomputes the aggregates corpus-wide, column-pruned — still no
-    * index shuffle, far under full-fsck cost). `dictFps` keeps
-    * PER-FILE fingerprints so an incremental pass can identify exactly
-    * the dict files appended since the watermark.
+    * index shuffle, far under full-fsck cost). `logFps` keeps the
+    * PER-FILE fingerprints of the layout's file log (the posting
+    * dictionary) so an incremental pass can identify exactly the files
+    * appended since the watermark.
     */
-  case class Mark(tombsFp: String, dictFps: Set[String], tables: Map[String, TableMark])
+  case class Mark(tombsFp: String, logFps: Set[String], tables: Map[String, TableMark])
 
   /** File-level bucket diff vs a recorded mark (see the class doc for
     * why the three-way split is the whole point).
@@ -101,7 +98,7 @@ private[graft] object FsckWatermark {
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** The watermark path for an index anchored at `anchorTable` (its
-    * postings / ivf table): `<generation-0 base of the location>.fsck`.
+    * primary table): `<generation-0 base of the location>.fsck`.
     */
   def path(spark: SparkSession, anchorTable: String): Path =
     new Path(Layout.baseGen(tableDir(spark, anchorTable).toString) + ".fsck")
@@ -132,7 +129,7 @@ private[graft] object FsckWatermark {
     if (fps.isEmpty) "-" else md5(fps.mkString("\n"))
   }
 
-  /** Per-file fingerprints of a plain table (for the dict, whose
+  /** Per-file fingerprints of a plain table (for a file log, whose
     * incremental check needs WHICH files appeared, not just that some
     * did).
     */
@@ -164,7 +161,7 @@ private[graft] object FsckWatermark {
     val sb  = new StringBuilder
     sb.append("graft-fsck v2\n")
     sb.append(s"tombs ${mark.tombsFp}\n")
-    mark.dictFps.toSeq.sorted.foreach(f => sb.append(s"dictfile $f\n"))
+    mark.logFps.toSeq.sorted.foreach(f => sb.append(s"dictfile $f\n"))
     mark.tables.toSeq.sortBy(_._1).foreach { case (t, tm) =>
       sb.append(s"table $t ${tm.numBuckets}\n")
       tm.buckets.toSeq.sortBy(_._1).foreach { case (b, m) =>
@@ -192,7 +189,7 @@ private[graft] object FsckWatermark {
       val lines = text.split("\n")
       if (lines.isEmpty || lines.head != "graft-fsck v2" || !lines.contains("end")) return None
       var tombsFp = "-"
-      val dictFps = scala.collection.mutable.Set[String]()
+      val logFps = scala.collection.mutable.Set[String]()
       val tables  = scala.collection.mutable.Map[String, TableMark]()
       var curTable: String = null
       var curNb = 0
@@ -203,7 +200,7 @@ private[graft] object FsckWatermark {
         val parts = line.split(" ")
         parts(0) match {
           case "tombs"    => tombsFp = parts(1)
-          case "dictfile" => dictFps += parts(1)
+          case "dictfile" => logFps += parts(1)
           case "table" =>
             closeTable()
             curTable = parts(1); curNb = parts(2).toInt
@@ -215,7 +212,7 @@ private[graft] object FsckWatermark {
         }
       }
       closeTable()
-      Some(Mark(tombsFp, dictFps.toSet, tables.toMap))
+      Some(Mark(tombsFp, logFps.toSet, tables.toMap))
     } catch { case scala.util.control.NonFatal(_) => None }
 
   def delete(spark: SparkSession, p: Path): Unit = {

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 
@@ -11,12 +11,14 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   *   - **primitives** over the tables every index kind has: the
   *     tombstone set, the replay-marker commit log, the live read view
   *     and the caller-contract guard;
-  *   - **maintenance** — full compaction and bucket-count migration,
-  *     bucket-scoped defrag, tombstone retirement, the incremental
-  *     maintenance and rebucket policies, the marker-guarded append,
-  *     stream wrappers and drop — written once against an
-  *     [[IndexLayout]], the plain description of an index's tables plus
-  *     the few hooks a kind supplies around the shared rewrites.
+  *   - **maintenance, fsck and repair** — full compaction and
+  *     bucket-count migration, bucket-scoped defrag, tombstone
+  *     retirement, the incremental maintenance and rebucket policies,
+  *     the marker-guarded append, stream wrappers and drop; the full
+  *     and incremental consistency checks and the repair — written once
+  *     against an [[IndexLayout]], the plain description of an index's
+  *     tables plus the hooks a kind supplies: a few steps around the
+  *     shared rewrites, its own invariants and its own repairs.
   *
   * Invariants:
   *
@@ -107,18 +109,34 @@ object IndexLifecycle {
   // ---------- tombstone set (idName, batch_id) ----------
 
   /** (Re)create an index's EMPTY tombstone table `(idName long,
-    * batch_id long)`: the ids every read anti-joins, tagged by the
-    * delete batch that wrote them (so a torn delete's replay can be
-    * told apart from a genuine double-delete).
+    * batch_id long, masks…)`: the ids every read anti-joins, tagged by
+    * the delete batch that wrote them (so a torn delete's replay can be
+    * told apart from a genuine double-delete), plus one nullable
+    * `array<int>` delete-time bucket mask per named column. Without
+    * masks it is the legacy two-column table, whose deletes retire by
+    * trace scan.
     */
-  def writeEmptyTombs(spark: SparkSession, table: String, path: String, idName: String): Unit =
+  def writeEmptyTombs(
+      spark: SparkSession,
+      table: String,
+      path: String,
+      idName: String,
+      masks: Seq[String] = Nil): Unit = {
+    import org.apache.spark.sql.types._
     Layout.createEmptyTable(
       spark, table, path,
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField(
-          idName, org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField(
-          "batch_id", org.apache.spark.sql.types.LongType, nullable = false))))
+      StructType(
+        Seq(
+          StructField(idName, LongType, nullable = false),
+          StructField("batch_id", LongType, nullable = false)) ++
+          masks.map(StructField(_, ArrayType(IntegerType, containsNull = true), nullable = true))))
+  }
+
+  /** The tombstone table of `layout`, with a mask column for every
+    * bucketed table that declares one.
+    */
+  def writeEmptyTombs(spark: SparkSession, layout: IndexLayout, path: String): Unit =
+    writeEmptyTombs(spark, layout.tombs, path, layout.tombId, layout.bucketed.flatMap(_.mask))
 
   /** Append a delete batch's tombstone rows (the ids in `ids(idCol)`,
     * cast to long, tagged `batchId`).
@@ -163,23 +181,16 @@ object IndexLifecycle {
     * after the rewrite for the same crash reason. `ids` is driver-side
     * by contract (a subset of the broadcast-sized set).
     */
-  def removeTombs(spark: SparkSession, table: String, idName: String, ids: Seq[Long]): Unit = {
-    if (ids.isEmpty) return
-    Layout.recoverDanglingSwap(spark, table)
-    val meta = spark.sessionState.catalog.getTableMetadata(
-      spark.sessionState.sqlParser.parseTableIdentifier(table))
-    // anti-join, not isin(ids): a wide window can hold up to
-    // heavyFraction × live ids, and an isin that size blows the codegen
-    // expression-size limit
-    import spark.implicits._
-    val idsDf = ids.toDF(idName)
-    val survivors = spark.read.schema(meta.schema).parquet(meta.location.toString)
-      .join(broadcast(idsDf), Seq(idName), "left_anti")
-      .select(meta.schema.fieldNames.map(col).toSeq: _*)
-    Layout.swapGeneration(spark, table, meta) { (scratch, newDir) =>
-      survivors.write.mode("overwrite").option("path", newDir).saveAsTable(scratch)
+  def removeTombs(spark: SparkSession, table: String, idName: String, ids: Seq[Long]): Unit =
+    if (ids.nonEmpty) {
+      // anti-join, not isin(ids): a wide window can hold up to
+      // heavyFraction × live ids, and an isin that size blows the codegen
+      // expression-size limit
+      import spark.implicits._
+      val idsDf = ids.toDF(idName)
+      Layout.rewritePlain(spark, table)(rows =>
+        rows.join(broadcast(idsDf), Seq(idName), "left_anti").select(rows.columns.map(col).toSeq: _*))
     }
-  }
 
   /** Broadcast hint for a tombstone-set frame, SIZE-GATED: the set is
     * slim by the compaction-cadence contract, but a deployment that
@@ -352,14 +363,29 @@ object IndexLifecycle {
   // ---------- index layout ----------
 
   /** One bucketed table of an index: its bucket (and sort) key, the
-    * column holding the index id, and the tombstone-table column that
+    * column holding the index id, the tombstone-table column that
     * carries this table's delete-time bucket mask, when deletes record
-    * one.
+    * one, and the per-bucket live aggregates the fsck watermark records
+    * for it, when it is watermarked.
     */
-  final case class BucketedTable(name: String, key: String, idCol: String, mask: Option[String] = None)
+  final case class BucketedTable(
+      name: String,
+      key: String,
+      idCol: String,
+      mask: Option[String] = None,
+      fsck: Option[BucketAgg] = None)
 
-  /** What a kind adds around the shared rewrites; every default does
-    * nothing.
+  /** The two per-bucket live aggregates the fsck watermark records for
+    * a table (the `a1`/`a2` slots of `FsckWatermark.BucketMark`).
+    * `additive`: both are sums over rows, so an added-only bucket's
+    * aggregates are the recorded ones plus its added files' alone; a
+    * non-additive aggregate (a distinct count) re-reads every touched
+    * bucket whole.
+    */
+  final case class BucketAgg(a1: Column, a2: Column, additive: Boolean)
+
+  /** What a kind adds around the shared rewrites and to the shared fsck
+    * and repair; every default does nothing.
     */
   trait KindHooks {
 
@@ -382,9 +408,18 @@ object IndexLifecycle {
       * commit logs coalesce and the set clears.
       */
     def afterFullRewrite(spark: SparkSession): Unit = ()
-  }
 
-  object NoHooks extends KindHooks
+    /** The kind's own invariant rows: over every live row when `scope`
+      * is None (the full check), over what changed since the last green
+      * check otherwise (the incremental check).
+      */
+    def fsck(spark: SparkSession, scope: Option[FsckScope]): Seq[Finding] = Nil
+
+    /** The kind's own repairs, run after the journal replay and before
+      * the marker-log dedup, one row per repair.
+      */
+    def repairs(spark: SparkSession): Seq[Finding] = Nil
+  }
 
   /** The plain description of an index that the maintenance ops run
     * against:
@@ -398,11 +433,17 @@ object IndexLifecycle {
     *     replay markers and are never collapsed, only file-coalesced;
     *   - `side`: tables the lifecycle never rewrites (dictionary,
     *     centroid model) — dropped with the index;
+    *   - `markerLog`: the plain table that is the `(batch_id, kind)`
+    *     marker log, when the index keeps one;
+    *   - `fsckFileLog`: a plain table whose per-file fingerprints the
+    *     fsck watermark records, so an incremental check can read
+    *     exactly the files appended since;
     *   - `liveCount`: the exact live id count, for the heavy-fraction
     *     policy;
     *   - `idInOneRow`: the declared property that every id is exactly
     *     ONE row of the index's single bucketed table, hence lives in
-    *     exactly one bucket.
+    *     exactly one bucket;
+    *   - `hooks`: what the kind adds (`KindHooks`).
     */
   final case class IndexLayout(
       tombs: String,
@@ -410,9 +451,11 @@ object IndexLifecycle {
       bucketed: Seq[BucketedTable],
       plain: Seq[String],
       side: Seq[String],
+      markerLog: Option[String],
+      fsckFileLog: Option[String],
       liveCount: SparkSession => Long,
       idInOneRow: Boolean = false,
-      hooks: KindHooks = NoHooks) {
+      hooks: KindHooks) {
     require(bucketed.nonEmpty, "an index layout needs at least one bucketed table")
     require(!idInOneRow || bucketed.size == 1, "idInOneRow holds only for a single bucketed table")
     def primary: String = bucketed.head.name
@@ -755,6 +798,257 @@ object IndexLifecycle {
       .map { t => Layout.coalescePlain(spark, t); t }
       .nonEmpty
     resumed || retired || defragged || coalesced
+  }
+
+  // ---------- fsck and repair ----------
+
+  /** One result row: `(check, ok, detail)` of a check, `(repair,
+    * applied, detail)` of a repair.
+    */
+  type Finding = (String, Boolean, String)
+
+  private def frame(spark: SparkSession, rows: Seq[Finding], cols: String*): DataFrame = {
+    import spark.implicits._
+    rows.toDF(cols: _*)
+  }
+
+  /** Live rows of `df` — a file scan of `table` — tagged `_b` with the
+    * bucket of the FILE each row was read from (the tag attaches below
+    * the tombstone anti-join; `input_file_name` resolves only against a
+    * single source).
+    */
+  private def liveByFile(spark: SparkSession, layout: IndexLayout, t: BucketedTable, df: DataFrame): DataFrame =
+    liveView(spark, layout.tombs, layout.tombId, df.withColumn("_b", Layout.fileBucketId), t.idCol)
+
+  /** One watermarked table's share of an incremental check.
+    *
+    *   - `diff`: its buckets against the watermark — unchanged,
+    *     added-only, rewritten. A table whose aggregates are not
+    *     additive counts every touched bucket as rewritten.
+    *   - `added` / `rewritten`: the LIVE rows of the added files and of
+    *     the rewritten buckets, read on first use, tagged `_b`.
+    *   - `agg`: per-bucket aggregates, recorded + added + recomputed.
+    *     Each row counts in the bucket of its physical FILE, not of its
+    *     key's hash: a corrupted file holding rows that hash elsewhere
+    *     must still count where it lives, or the decomposition would
+    *     silently drop it. A changed tombstone set (the aggregates are
+    *     live) or a table without a recorded mark recomputes the whole
+    *     table, column-pruned, with no index shuffle.
+    */
+  final class TableScope private[IndexLifecycle] (
+      spark: SparkSession,
+      layout: IndexLayout,
+      t: BucketedTable,
+      agg0: BucketAgg,
+      recorded: Option[FsckWatermark.TableMark],
+      tombsChanged: Boolean) {
+    private val listed = FsckWatermark.bucketFileSets(spark, t.name)
+    val numBuckets: Int = listed._1
+    private val files: Map[Int, Set[String]] = listed._2
+    val rebucketed: Boolean = recorded.exists(_.numBuckets != numBuckets)
+    val diff: FsckWatermark.Diff = {
+      val d = recorded.map(FsckWatermark.diff(_, numBuckets, files))
+        .getOrElse(FsckWatermark.Diff(Set.empty, Map.empty, files.keySet))
+      if (agg0.additive) d else FsckWatermark.Diff(d.unchanged, Map.empty, d.touched)
+    }
+    lazy val added: Option[DataFrame] =
+      Layout.readFiles(spark, t.name,
+        diff.addedOnly.valuesIterator.flatten.map(FsckWatermark.filePath(spark, t.name, _)).toSeq)
+        .map(liveByFile(spark, layout, t, _))
+    lazy val rewritten: Option[DataFrame] =
+      (if (diff.rewritten.isEmpty) None
+       else Layout.readFiles(spark, t.name, Layout.bucketFiles(spark, t.name, diff.rewritten)))
+        .map(liveByFile(spark, layout, t, _))
+
+    /** The live rows of every added file and rewritten bucket. */
+    def delta: Option[DataFrame] = (added, rewritten) match {
+      case (Some(a), Some(r)) => Some(a.unionByName(r))
+      case (a, r)             => a.orElse(r)
+    }
+
+    private def perBucket(live: DataFrame): Map[Int, (Long, Long)] =
+      live.groupBy(col("_b")).agg(agg0.a1, agg0.a2).collect()
+        .map(r => r.getInt(0) -> ((if (r.isNullAt(1)) 0L else r.getLong(1), r.getLong(2))))
+        .toMap
+
+    private lazy val agg: Map[Int, (Long, Long)] = recorded match {
+      case Some(m) if !tombsChanged =>
+        val add = added.map(perBucket).getOrElse(Map.empty)
+        val rew = rewritten.map(perBucket).getOrElse(Map.empty)
+        (m.buckets.keySet ++ files.keySet).iterator.map { b =>
+          val kept = if (diff.rewritten(b)) None else m.buckets.get(b).map(x => (x.a1, x.a2))
+          b -> Seq(kept, add.get(b), rew.get(b)).flatten
+            .foldLeft((0L, 0L)) { case ((x, y), (u, v)) => (x + u, y + v) }
+        }.toMap
+      case _ => perBucket(liveByFile(spark, layout, t, spark.table(t.name)))
+    }
+
+    /** The two aggregates summed over every bucket. */
+    def totals: (Long, Long) = (agg.valuesIterator.map(_._1).sum, agg.valuesIterator.map(_._2).sum)
+
+    private[IndexLifecycle] def mark: FsckWatermark.TableMark =
+      FsckWatermark.TableMark(numBuckets, files.map { case (b, fs) =>
+        val (a1, a2) = agg.getOrElse(b, (0L, 0L))
+        b -> FsckWatermark.BucketMark(fs, a1, a2)
+      })
+  }
+
+  /** What the incremental check hands a kind: a `TableScope` per
+    * watermarked table that exists (in layout order), whether the
+    * tombstone set changed since the watermark, and the file-log files
+    * added and removed since.
+    */
+  final class FsckScope private[IndexLifecycle] (
+      spark: SparkSession,
+      layout: IndexLayout,
+      recorded: Option[FsckWatermark.Mark]) {
+    private val tombsFp = FsckWatermark.plainFp(spark, layout.tombs)
+    private val logFps  = layout.fsckFileLog.map(FsckWatermark.plainFileFps(spark, _)).getOrElse(Set.empty)
+    val tombsChanged: Boolean = !recorded.exists(_.tombsFp == tombsFp)
+    val tables: Seq[(String, TableScope)] =
+      layout.bucketed.filter(b => spark.catalog.tableExists(b.name)).flatMap { b =>
+        b.fsck.map(a => b.name -> new TableScope(
+          spark, layout, b, a, recorded.flatMap(_.tables.get(b.name)), tombsChanged))
+      }
+    def table(name: String): Option[TableScope] = tables.collectFirst { case (`name`, s) => s }
+    val logAdded: Set[String]   = logFps -- recorded.map(_.logFps).getOrElse(Set.empty)
+    val logRemoved: Set[String] = recorded.map(_.logFps).getOrElse(Set.empty) -- logFps
+
+    private[IndexLifecycle] def mark: FsckWatermark.Mark =
+      FsckWatermark.Mark(tombsFp, logFps, tables.map { case (n, s) => n -> s.mark }.toMap)
+  }
+
+  /** Duplicated `(batch_id, kind)` rows of a marker log. */
+  private def duplicateMarkers(spark: SparkSession, table: String): Long =
+    spark.table(table)
+      .groupBy(col("batch_id"), col("kind"))
+      .agg(count(lit(1)).as("c")).filter(col("c") > 1).count()
+
+  /** The rows every index has, all catalog or listing probes but the
+    * marker log's:
+    *
+    *   - `marker_log_unique`: a duplicate `(batch_id, kind)` marker
+    *     means replay idempotence is broken for that batch id;
+    *   - `bucket_spec_coherent`: mixed bucket counts are a torn
+    *     migration — answers stay correct, but the unswapped tables keep
+    *     the old parallelism until a maintenance entry point resumes it;
+    *   - `dangling_generation`: the immediate previous generation of a
+    *     table is legal reader-safe retention, anything older on disk is
+    *     a leak (a crashed maintenance pass that never ran again);
+    *   - `bucket_journal_pending`: a committed but uncompleted bucket
+    *     compaction — every maintenance entry point replays it, repair
+    *     heals it at rest.
+    */
+  private def sharedFindings(spark: SparkSession, layout: IndexLayout): Seq[Finding] = {
+    val markers = layout.markerLog.filter(spark.catalog.tableExists).map { t =>
+      val dups = duplicateMarkers(spark, t)
+      ("marker_log_unique", dups == 0, s"$dups duplicated (batch_id, kind) markers")
+    }
+    val coherent = bucketSpecIncoherence(spark, layout) match {
+      case Some(target) =>
+        val counts = existing(spark, layout).map(b => s"${b.name}=${Layout.numBuckets(spark, b.name)}")
+        ("bucket_spec_coherent", false,
+          s"mixed bucket counts (${counts.mkString(", ")}) — any maintenance entry point " +
+            s"resumes the migration to $target buckets")
+      case None => ("bucket_spec_coherent", true, "bucketed tables agree on bucket count")
+    }
+    val leaks = layout.tables.filter(spark.catalog.tableExists)
+      .flatMap(t => Layout.danglingGenerations(spark, t).map(d => s"$t -> $d"))
+    val journals = layout.bucketed.map(_.name).filter(Layout.pendingBucketJournal(spark, _))
+    markers.toSeq ++ Seq(
+      coherent,
+      ("dangling_generation", leaks.isEmpty,
+        if (leaks.isEmpty) "retention bounded at one generation" else leaks.mkString("; ")),
+      ("bucket_journal_pending", journals.isEmpty,
+        if (journals.isEmpty) "no pending bucket-compaction journal"
+        else s"committed journal awaiting replay: ${journals.mkString(", ")}"))
+  }
+
+  private def findings(spark: SparkSession, layout: IndexLayout, scope: Option[FsckScope]): Seq[Finding] =
+    layout.hooks.fsck(spark, scope) ++ sharedFindings(spark, layout)
+
+  /** The consistency check (fsck) an index needs after a crash, a
+    * killed maintenance job or an operator mistake: the kind's
+    * invariants over every live row plus the shared rows, one
+    * `(check, ok, detail)` row each. Run it AT REST (no in-flight
+    * append or delete).
+    */
+  def check(spark: SparkSession, layout: IndexLayout): DataFrame =
+    frame(spark, findings(spark, layout, None), "check", "ok", "detail")
+
+  /** The maintenance-cadence check: the same invariants at a cost that
+    * tracks the bytes written since the last GREEN check.
+    *
+    *   - No watermark, or one that cannot be read: run the full check
+    *     and record a watermark (`FsckWatermark`: per-bucket file sets
+    *     and live aggregates) only when it is green.
+    *   - Otherwise: diff each watermarked table's files into unchanged,
+    *     added-only and rewritten buckets (`TableScope`), hand the scope
+    *     to the kind, and advance the watermark only when green — a red
+    *     result keeps the evidence window open for the next pass.
+    *
+    * Trust boundary: the watermark trusts a file's (name, length,
+    * mtime), so a corruption that preserves all three in an untouched
+    * bucket is invisible here; the periodic full `check` holds no
+    * watermark trust. The result carries an `fsck_scope` row naming the
+    * mode and the touched buckets.
+    */
+  def checkIncremental(spark: SparkSession, layout: IndexLayout): DataFrame = {
+    if (!spark.catalog.tableExists(layout.primary)) return check(spark, layout)
+    val wm = FsckWatermark.path(spark, layout.primary)
+    val recorded = FsckWatermark.read(spark, wm)
+    val scope = recorded.map(r => new FsckScope(spark, layout, Some(r)))
+    val rows = findings(spark, layout, scope)
+    val green = rows.forall(_._2)
+    if (green) FsckWatermark.write(spark, wm, scope.getOrElse(new FsckScope(spark, layout, None)).mark)
+    val detail = scope match {
+      case None =>
+        "full: no (or unreadable) watermark — ran the full check" +
+          (if (green) "; watermark recorded" else "; RED result, watermark NOT recorded")
+      case Some(s) =>
+        // a one-table index needs no table label
+        def label(t: String) = if (layout.bucketed.size > 1) t.drop(t.lastIndexOf('_') + 1) + " " else ""
+        val tables = s.tables.map { case (t, ts) =>
+          s"${label(t)}${ts.diff.touched.size}/${ts.numBuckets} buckets touched " +
+            s"(${ts.diff.addedOnly.size} added-only, ${ts.diff.rewritten.size} rewritten)"
+        }
+        s"incremental: ${tables.mkString(", ")}; tombstones " +
+          (if (s.tombsChanged) "CHANGED (live aggregates recomputed corpus-wide, column-pruned)" else "unchanged") +
+          (if (green) "; watermark advanced" else "; RED result — watermark NOT advanced") +
+          "; fingerprint-evading corruption in untouched buckets needs the periodic full check"
+    }
+    frame(spark, rows :+ (("fsck_scope", true, detail)), "check", "ok", "detail")
+  }
+
+  /** fsck that HEALS: derive each repair from the surviving tables,
+    * apply it, and report one `(repair, applied, detail)` row per
+    * repair. Run AT REST, like `check`.
+    *
+    *   - `bucket_journal_replay` runs FIRST: every other repair derives
+    *     from table state, which a mid-swap file set would corrupt
+    *     rather than heal;
+    *   - then the kind's repairs;
+    *   - `marker_dedup`: the marker log is pure replay state, duplicates
+    *     are byte-identical by construction and collapse to one row per
+    *     `(batch_id, kind)`.
+    */
+  def repair(spark: SparkSession, layout: IndexLayout): DataFrame = {
+    val replayed = layout.bucketed.map(_.name)
+      .filter(spark.catalog.tableExists)
+      .filter(Layout.recoverBucketCompact(spark, _))
+    val journal = ("bucket_journal_replay", replayed.nonEmpty,
+      if (replayed.isEmpty) "no pending bucket-compaction journal"
+      else s"journal replayed to convergence: ${replayed.mkString(", ")}")
+    val kind = layout.hooks.repairs(spark)
+    val dedup = layout.markerLog.filter(spark.catalog.tableExists).map { t =>
+      val dups = duplicateMarkers(spark, t)
+      if (dups == 0) ("marker_dedup", false, "marker log unique")
+      else {
+        Layout.rewritePlain(spark, t)(_.distinct())
+        ("marker_dedup", true, s"$dups duplicated (batch_id, kind) markers collapsed")
+      }
+    }
+    frame(spark, (journal +: kind) ++ dedup, "repair", "applied", "detail")
   }
 
   // ---------- write-side helpers ----------

@@ -154,30 +154,50 @@ object Layout {
 
   /** Coalesce a PLAIN (non-bucketed) table's files back to one,
     * preserving every row — the maintenance pass the commit-marker
-    * logs need (round 15): the stats table and the marker logs append
-    * ONE file per committed batch by construction (each insertInto is
-    * its own write job), so a long-lived streamed index accumulates
-    * one tiny parquet file per batch forever and every query's stats
-    * read opens all of them. Their ROWS must never be collapsed (each
-    * is a replay-idempotence marker — `compactIndex` documents why),
-    * but the FILES can: a rows-preserving rewrite keeps the replay
+    * logs need: the stats table and the marker logs append ONE file per
+    * committed batch by construction (each insertInto is its own write
+    * job), so a long-lived streamed index accumulates one tiny parquet
+    * file per batch forever and every query's stats read opens all of
+    * them. Their ROWS must never be collapsed (each is a
+    * replay-idempotence marker — `IndexLifecycle` documents why), but
+    * the FILES can: a rows-preserving rewrite keeps the replay
     * semantics bit-identical while resetting the open/footer cost.
-    * Same generation-swap discipline as every rewrite (reader-safe
-    * retention included); single-writer maintenance window, like all
-    * compaction entry points.
     */
-  private[graft] def coalescePlain(spark: SparkSession, tableName: String): Unit = {
+  private[graft] def coalescePlain(spark: SparkSession, tableName: String): Unit =
+    rewritePlain(spark, tableName)(_.coalesce(1))
+
+  /** Rewrite a PLAIN (non-bucketed) table as the next generation of
+    * `rows(current)` — the current generation read path-based with its
+    * catalog schema — under the same generation-swap discipline as
+    * every rewrite (a dangling swap recovers first; reader-safe
+    * retention included). Single-writer maintenance window, like all
+    * compaction entry points. A bucketed table is refused: this write
+    * would drop its bucket spec.
+    */
+  private[graft] def rewritePlain(spark: SparkSession, tableName: String)(
+      rows: DataFrame => DataFrame): Unit = {
     recoverDanglingSwap(spark, tableName)
     val meta = spark.sessionState.catalog.getTableMetadata(
       spark.sessionState.sqlParser.parseTableIdentifier(tableName))
     require(
       meta.bucketSpec.isEmpty,
       s"$tableName is bucketed — use compact, which preserves the bucket spec")
-    val rows = spark.read.schema(meta.schema).parquet(meta.location.toString).coalesce(1)
+    val next = rows(spark.read.schema(meta.schema).parquet(meta.location.toString))
     swapGeneration(spark, tableName, meta) { (scratch, newDir) =>
-      rows.write.mode("overwrite").option("path", newDir).saveAsTable(scratch)
+      next.write.mode("overwrite").option("path", newDir).saveAsTable(scratch)
     }
   }
+
+  /** `paths` of `tableName` read with its catalog schema (None for no
+    * paths) — for reads scoped to some of a table's files.
+    */
+  private[graft] def readFiles(spark: SparkSession, tableName: String, paths: Seq[String]): Option[DataFrame] =
+    if (paths.isEmpty) None
+    else {
+      val meta = spark.sessionState.catalog.getTableMetadata(
+        spark.sessionState.sqlParser.parseTableIdentifier(tableName))
+      Some(spark.read.schema(meta.schema).parquet(paths: _*))
+    }
 
   /** Parquet data-file count of a table's current generation — the
     * fragmentation probe for plain (marker-log) tables, where the file
@@ -619,6 +639,15 @@ object Layout {
   private[graft] def bucketIdOf(fileName: String): Option[Int] = fileName match {
     case BucketIdRe(id) => Some(id.toInt)
     case _              => None
+  }
+
+  /** `bucketIdOf` of the file each row was read from, -1 for a file
+    * without a bucket suffix. Valid only directly over a file scan.
+    */
+  private[graft] def fileBucketId: org.apache.spark.sql.Column = {
+    import org.apache.spark.sql.functions.{element_at, input_file_name, lit, regexp_extract, split, when}
+    val id = regexp_extract(element_at(split(input_file_name(), "/"), -1), BucketIdRe.regex, 1)
+    when(id === "", lit(-1)).otherwise(id.cast("int"))
   }
 
   /** The bucket id Spark's bucketed write assigns to `key` —

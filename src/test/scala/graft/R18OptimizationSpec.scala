@@ -22,7 +22,9 @@ import org.apache.spark.sql.functions._
   *    schema (a null is a NULL of its column's type) and refuses a
   *    value of the wrong class;
   *  - append, delete and maintain keep their job and listing counts
-  *    per index kind.
+  *    per index kind, and so do the full check, the incremental check
+  *    (first run: full + record; second run: idle) and the repair that
+  *    follow them, together with the check/repair names each returns.
   */
 class R18OptimizationSpec extends SparkTestBase {
   import spark.implicits._
@@ -141,6 +143,12 @@ class R18OptimizationSpec extends SparkTestBase {
       org.apache.spark.GraftBus.drain(sc)
       (jobsByGroup.getOrDefault(group, 0).intValue, listings)
     }
+    // (jobs, listings, names) of a check or repair call
+    def named(label: String)(body: => org.apache.spark.sql.DataFrame): (Int, Long, Set[String]) = {
+      var names = Set.empty[String]
+      val (jobs, listings) = cost(label) { names = body.collect().map(_.getString(0)).toSet }
+      (jobs, listings, names)
+    }
     sc.addSparkListener(listener)
     try {
       val docs = spark.read.parquet(s"$sfDir/documents.parquet")
@@ -155,6 +163,11 @@ class R18OptimizationSpec extends SparkTestBase {
           docs.filter(col("doc_id") % 7 === 3), "doc_id", "text", pName, batchId = 2L)),
         cost("maintain")(Postings.maintainIncremental(
           spark, pName, maxFilesPerBucket = 1, maxTombstones = 0L)))
+      val postingsFsck = Seq(
+        named("check")(Postings.checkIndex(spark, pName)),
+        named("incremental")(Postings.checkIndexIncremental(spark, pName)),
+        named("incremental")(Postings.checkIndexIncremental(spark, pName)),
+        named("repair")(Postings.repairIndex(spark, pName)))
       Postings.dropIndex(spark, pName)
 
       val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
@@ -173,6 +186,11 @@ class R18OptimizationSpec extends SparkTestBase {
           vecCol = Some("embedding"))),
         cost("maintain")(Knn.maintainIvfIncremental(
           spark, iName, maxFilesPerBucket = 1, maxTombstones = 0L)))
+      val ivfFsck = Seq(
+        named("check")(Knn.checkIvfIndex(spark, iName)),
+        named("incremental")(Knn.checkIvfIndexIncremental(spark, iName)),
+        named("incremental")(Knn.checkIvfIndexIncremental(spark, iName)),
+        named("repair")(Knn.repairIvfIndex(spark, iName)))
       Knn.dropIvfIndex(spark, iName)
 
       // (jobs, listings) per call, measured on the per-kind maintenance
@@ -183,6 +201,35 @@ class R18OptimizationSpec extends SparkTestBase {
       // needs a rewrite, as the IVF side always did
       assert(postings === Seq((6, 2L), (2, 2L), (19, 10L)), "postings append/delete/maintain")
       assert(ivf === Seq((3, 2L), (3, 2L), (9, 8L)), "ivf append/delete/maintain")
+
+      // (jobs, listings, names) of full check, incremental check (first
+      // run: full check + record; second run: idle) and repair, measured
+      // on the per-kind fsck code before it moved into IndexLifecycle.
+      // Two differences since: the idle postings incremental check lists
+      // no directory (it listed the postings table for its rewritten
+      // buckets even when there were none), and IVF gained the shared,
+      // always-green bucket_spec_coherent row (one bucketed table cannot
+      // disagree with itself; a catalog probe, no job)
+      val pCheck = Set(
+        "stats_total_nonnegative", "sum_dl_equals_live_tf_sum", "live_doc_count_le_stats_n",
+        "stats_markers_unique", "dict_df_covers_live_postings", "bucket_spec_coherent",
+        "dangling_generation", "bucket_journal_pending", "dict_delta_pending")
+      val pIdle = pCheck - "live_doc_count_le_stats_n" + "fsck_scope"
+      assert(postingsFsck === Seq(
+        (14, 3L, pCheck),
+        (16, 4L, pCheck + "fsck_scope"),
+        (5, 0L, pIdle),
+        (5, 1L, Set("bucket_journal_replay", "torn_delete_stats", "dict_recount", "dict_delta_resolve"))),
+        "postings check/incremental/incremental/repair")
+      val iCheck = Set(
+        "vector_unique", "cells_from_model", "norms_consistent", "marker_log_unique",
+        "bucket_spec_coherent", "dangling_generation", "bucket_journal_pending")
+      assert(ivfFsck === Seq(
+        (12, 1L, iCheck),
+        (15, 2L, iCheck + "fsck_scope"),
+        (3, 0L, iCheck + "fsck_scope"),
+        (12, 0L, Set("bucket_journal_replay", "ivf_rewrite", "tombstone_mask_reset", "marker_dedup"))),
+        "ivf check/incremental/incremental/repair")
     } finally sc.removeSparkListener(listener)
   }
 }
