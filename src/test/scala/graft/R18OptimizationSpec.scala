@@ -1,6 +1,7 @@
 package graft
 
 import graft.sources.{IndexLifecycle, Layout}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Focused regression legs for the round-18 optimization work — each
@@ -24,7 +25,9 @@ import org.apache.spark.sql.functions._
   *  - append, delete and maintain keep their job and listing counts
   *    per index kind, and so do the full check, the incremental check
   *    (first run: full + record; second run: idle) and the repair that
-  *    follow them, together with the check/repair names each returns.
+  *    follow them, together with the check/repair names each returns;
+  *  - each public BM25 search form keeps its job and listing count
+  *    over a live view with an appended batch and live tombstones.
   */
 class R18OptimizationSpec extends SparkTestBase {
   import spark.implicits._
@@ -123,18 +126,19 @@ class R18OptimizationSpec extends SparkTestBase {
     spark.sql(s"DROP TABLE IF EXISTS $name")
   }
 
-  test("maintenance cost per kind: jobs and directory listings of append, delete, maintain") {
-    import graft.retrieval.Postings
-    import graft.similarity.Knn
-    val sc = spark.sparkContext
-    val jobsByGroup = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
+  /** (jobs, directory listings) of single calls: jobs are counted per
+    * call in the call's own job group, after the listener bus drains. */
+  private final class JobCost {
+    private val sc = spark.sparkContext
+    private val jobsByGroup = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+    private val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
         Option(js.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
           .foreach(g => jobsByGroup.merge(g, 1, (a: Integer, b: Integer) => a + b))
     }
-    // (jobs, directory listings) of one call, jobs keyed by its own job group
-    def cost(label: String)(body: => Unit): (Int, Long) = {
+    sc.addSparkListener(listener)
+
+    def apply(label: String)(body: => Unit): (Int, Long) = {
       val group = s"${freshName("cost")}_$label"
       val l0 = Layout.dirListings.get()
       sc.setJobGroup(group, label)
@@ -143,13 +147,20 @@ class R18OptimizationSpec extends SparkTestBase {
       org.apache.spark.GraftBus.drain(sc)
       (jobsByGroup.getOrDefault(group, 0).intValue, listings)
     }
+
+    def close(): Unit = sc.removeSparkListener(listener)
+  }
+
+  test("maintenance cost per kind: jobs and directory listings of append, delete, maintain") {
+    import graft.retrieval.Postings
+    import graft.similarity.Knn
+    val cost = new JobCost
     // (jobs, listings, names) of a check or repair call
     def named(label: String)(body: => org.apache.spark.sql.DataFrame): (Int, Long, Set[String]) = {
       var names = Set.empty[String]
       val (jobs, listings) = cost(label) { names = body.collect().map(_.getString(0)).toSet }
       (jobs, listings, names)
     }
-    sc.addSparkListener(listener)
     try {
       val docs = spark.read.parquet(s"$sfDir/documents.parquet")
         .select(col("doc_id"), col("text")).filter(col("doc_id") < 40)
@@ -230,6 +241,35 @@ class R18OptimizationSpec extends SparkTestBase {
         (3, 0L, iCheck + "fsck_scope"),
         (12, 0L, Set("bucket_journal_replay", "ivf_rewrite", "tombstone_mask_reset", "marker_dedup"))),
         "ivf check/incremental/incremental/repair")
-    } finally sc.removeSparkListener(listener)
+    } finally cost.close()
+  }
+
+  test("bm25 cost: jobs and directory listings of one search per public form") {
+    import graft.retrieval.Postings
+    val docs = spark.read.parquet(s"$sfDir/documents.parquet").select(col("doc_id"), col("text"))
+    val name = freshName("bcost")
+    Postings.writeIndex(docs.filter(col("doc_id") % 2 === 0), "doc_id", "text",
+      name, s"/tmp/graft_r18opt/$name", buckets = 4)
+    Postings.appendBatch(docs.filter(col("doc_id") % 2 === 1), "doc_id", "text", name, batchId = 1L)
+    Postings.deleteBatch(docs.filter(col("doc_id") % 7 === 3), "doc_id", "text", name, batchId = 2L)
+    val terms = Seq("spark", "merge", "scan")
+    // every search reads the live view, as a serving caller does
+    def search(q: (DataFrame, DataFrame) => DataFrame): Array[Row] =
+      q(Postings.livePostings(spark, name), Postings.statsTable(spark, name)).collect()
+    val cursor = search(Postings.bm25TopK(_, _, terms, 5)).last
+    val cost = new JobCost
+    val costs =
+      try Seq(
+        cost("topk")(search(Postings.bm25TopK(_, _, terms, 10))),
+        cost("after")(search(Postings.bm25TopKAfter(_, _, terms, 10,
+          cursor.getAs[Double]("score"), cursor.getAs[Long]("doc_id")))),
+        cost("classic_rounded")(search(Postings.bm25TopKClassicRounded(_, _, terms, 10))),
+        cost("multi")(search(Postings.bm25MultiTopK(_, _,
+          Seq(1L -> terms, 2L -> Seq("row", "spark"), 3L -> Seq("zzz_absent")), 10))))
+      finally cost.close()
+    Postings.dropIndex(spark, name)
+    // (jobs, listings) per search form; the one listing is the live
+    // view's tombstone-directory probe
+    assert(costs === Seq((9, 1L), (9, 1L), (9, 1L), (12, 1L)), "topk/after/classic_rounded/multi")
   }
 }
