@@ -37,9 +37,9 @@ object Tables {
   private[graft] val schemaMemo =
     new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
 
-  /** Invalidate the schema memo for `path` (or everything, with no
-    * argument) — the hook any code path that REWRITES a base-table
-    * directory in-process must call (ADVICE r17: the memo is
+  /** Invalidate the schema memo for `path` — the hook any code path
+    * that REWRITES a base-table directory in-process must call
+    * (ADVICE r17: the memo is
     * process-global and never expires, so a regenerated directory
     * with a different schema would otherwise be read under the stale
     * explicit schema, which parquet resolves to silent nulls instead
@@ -49,7 +49,6 @@ object Tables {
     * memo starts empty.
     */
   private[graft] def invalidateSchema(path: String): Unit = { schemaMemo.remove(path); () }
-  private[graft] def invalidateSchemas(): Unit = schemaMemo.clear()
 
   /** Every table the testdata directory ships. */
   val names: Seq[String] = Seq(

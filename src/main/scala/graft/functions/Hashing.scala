@@ -30,10 +30,6 @@ object Hashing {
   def hash60Composed(c: Column): Column =
     conv(substring(md5(c), 1, 15), 16, 10).cast("long")
 
-  /** Seeded variant: independent hash family member i (MinHash). */
-  def hash60Seeded(i: Int, c: Column): Column =
-    hash60(concat(lit(i.toString), lit(":"), c))
-
   /** Driver-side twin of `hash60` for PLAN-TIME literals: top 60 bits
     * of md5, bit-identical to the column expression (spec-pinned).
     * Exists so an index query can push `term_h IN (<literal hashes>)`

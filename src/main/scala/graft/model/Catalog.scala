@@ -1,7 +1,6 @@
 package graft.model
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.types.StructType
 
 /** The catalog: one named DataFrame per entity/bridge table, backed by
   * one parquet directory per table.
@@ -90,7 +89,4 @@ object Catalog {
   /** Load a previously saved catalog directory. */
   def load(spark: SparkSession, dir: String, names: Iterable[String] = Schemas.all.keys): Catalog =
     Catalog(spark, names.map(n => n -> spark.read.parquet(s"$dir/$n")).toMap)
-
-  /** Schema of a table as declared (for round-trip validation). */
-  def expectedSchema(name: String): StructType = Schemas.all(name)
 }

@@ -103,13 +103,6 @@ object Ops {
       .filter(col("n_matched") === wanted.size)
       .select(col(keyCol))
 
-  /** HAVING: keys of `df` whose group count satisfies `pred`. */
-  def havingCount(df: DataFrame, keyCol: String, pred: Column => Column): DataFrame =
-    df.groupBy(col(keyCol))
-      .agg(count(lit(1)).as("n"))
-      .filter(pred(col("n")))
-      .select(col(keyCol))
-
   /** Deterministic pagination (W1): `orderCols` must be a total order.
     * Two stages: a distributed top-((page+1)*pageSize) — Catalyst's
     * TakeOrderedAndProject, per-partition heaps then a merge, never a

@@ -3,6 +3,7 @@ package graft.retrieval
 import graft.functions.{Hashing, TextAnalysis}
 import graft.sources.{IndexLifecycle, Layout}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Persisted posting-list index for ad-hoc ranked retrieval — the
@@ -131,6 +132,23 @@ object Postings {
     */
   private def termHashPrune(terms: Seq[String]): Column =
     col("term_h").isin(terms.map(Hashing.hash60Jvm): _*)
+
+  /** The rows of a term-hash-bucketed index (frequency or positional)
+    * for the distinct `terms`: the bucket-pruned scan joined to the
+    * broadcast terms frame on `term_h`, keeping the index side's
+    * partitioning (zero index-side exchange). The term string is the
+    * 60-bit hash collision guard.
+    */
+  private def termPostings(index: DataFrame, terms: Seq[String]): DataFrame = {
+    val spark = index.sparkSession
+    import spark.implicits._
+    val ts = terms.distinct
+    val termsDf = ts.toDF("q_term").select(Hashing.hash60(col("q_term")).as("term_h"), col("q_term"))
+    index
+      .filter(termHashPrune(ts))
+      .join(broadcast(termsDf), Seq("term_h"))
+      .filter(col("term") === col("q_term"))
+  }
 
   /** Term-dictionary rows for a batch: the batch's DISTINCT terms with
     * their PARTIAL document frequency (posting count within the batch).
@@ -1554,120 +1572,6 @@ object Postings {
       .orderBy(col("query_id"), col("doc_id"))
   }
 
-  /** SCORED multi-query retrieval: per-query BM25 top-`k` for MANY
-    * standing queries in ONE pass over the posting index — the ranked
-    * form of `matchQueries` (alerts that want their best hits, not
-    * just membership). One pruned scan of the union of standing
-    * terms, one broadcast (query_id, term, rank) frame, one shuffle
-    * keyed (query_id, doc_id) for the score fold, then a per-query
-    * window over the already-aggregated frame (bounded by matches,
-    * never the corpus). Per-(query, term) df equals the term's global
-    * posting count (each pairing joins the identical doc set), so df
-    * derives from the matched rows exactly as in `bm25TopK` — no
-    * persisted-stat maintenance, and the same bit-exact IEEE score
-    * tree (rank-sorted fold from exact 0.0).
-    */
-  def bm25MultiTopK(
-      postings: DataFrame,
-      stats: DataFrame,
-      queries: Seq[(Long, Seq[String])],
-      k: Int): DataFrame =
-    bm25MultiScored(postings, stats, queries)
-      .withColumn(
-        "rk",
-        row_number().over(
-          org.apache.spark.sql.expressions.Window
-            .partitionBy(col("query_id"))
-            .orderBy(col("score").desc, col("doc_id"))))
-      .filter(col("rk") <= k)
-      .select(col("query_id"), col("doc_id"), col("dl"), col("n_matched"), col("score"))
-      .orderBy(col("query_id"), col("score").desc, col("doc_id"))
-
-  /** Raw classic-mode multi-query scores (the frame d69's margin
-    * guard reads — one row per (query, matching doc)).
-    */
-  def bm25MultiScoredClassic(
-      postings: DataFrame,
-      stats: DataFrame,
-      queries: Seq[(Long, Seq[String])]): DataFrame =
-    bm25MultiScored(postings, stats, queries, classicIdf = true)
-      .select(col("query_id"), col("doc_id"), col("dl"), col("n_matched"), col("score"))
-
-  /** CLASSIC-mode ranked multi-query retrieval ON THE ROUNDED GRID —
-    * the per-query-rank-cut composition of the d65 epsilon-oracle
-    * technique (the keyset composition is `bm25TopKClassicAfter`):
-    * each standing query's top-k is ranked by `(score_r DESC,
-    * doc_id)` where score_r is the 5-decimal round, so under the
-    * margin guard every per-query rank cut lands on the identical
-    * row set on any engine. Plan shape is `bm25MultiTopK`'s — one
-    * pruned pass over the union of standing terms; only the idf
-    * factor, the grid round, and the window key change.
-    */
-  def bm25MultiTopKClassicRounded(
-      postings: DataFrame,
-      stats: DataFrame,
-      queries: Seq[(Long, Seq[String])],
-      k: Int): DataFrame =
-    bm25MultiScored(postings, stats, queries, classicIdf = true)
-      .withColumn("score_r", round(col("score"), 5))
-      .withColumn(
-        "rk",
-        row_number().over(
-          org.apache.spark.sql.expressions.Window
-            .partitionBy(col("query_id"))
-            .orderBy(col("score_r").desc, col("doc_id"))))
-      .filter(col("rk") <= k)
-      .select(col("query_id"), col("doc_id"), col("dl"), col("n_matched"), col("score_r"))
-      .orderBy(col("query_id"), col("score_r").desc, col("doc_id"))
-
-  private def bm25MultiScored(
-      postings: DataFrame,
-      stats: DataFrame,
-      queries: Seq[(Long, Seq[String])],
-      classicIdf: Boolean = false): DataFrame = {
-    require(queries.nonEmpty, "scored multi-query retrieval needs at least one standing query")
-    require(queries.forall(_._2.nonEmpty), "every standing query needs at least one term")
-    require(queries.map(_._1).distinct.size == queries.size, "standing query ids must be unique")
-    val spark = postings.sparkSession
-    import spark.implicits._
-    val qt = queries.flatMap { case (qid, ts) =>
-      ts.distinct.zipWithIndex.map { case (t, r) => (qid, t, r) }
-    }
-    val termsDf = qt
-      .toDF("query_id", "q_term", "trank")
-      .select(
-        col("query_id"),
-        Hashing.hash60(col("q_term")).as("term_h"),
-        col("q_term"),
-        col("trank"))
-    val tot = stats.agg(sum(col("n_docs")).as("n_docs"), sum(col("sum_dl")).as("sum_dl"))
-    val matched = postings
-      .filter(termHashPrune(qt.map(_._2).distinct))
-      .join(broadcast(termsDf), Seq("term_h"))
-      .filter(col("term") === col("q_term")) // 60-bit collision guard
-      .select(col("query_id"), col("term"), col("trank"), col("doc_id"), col("tf"), col("dl"))
-    val dfs = matched.groupBy(col("query_id"), col("term")).agg(count(lit(1)).as("df"))
-    val avgdl = col("sum_dl").cast("double") / col("n_docs").cast("double")
-    val tfd   = col("tf").cast("double")
-    val idfSurrogate = ((col("n_docs") - col("df")) + lit(0.5)) / (col("df") + lit(0.5))
-    // classic mode: plain `1.0 +` then ln (see bm25Scored — the oracle
-    // evaluates LN(1 + x) on the identical argument double)
-    val idf = if (classicIdf) log(lit(1.0) + idfSurrogate) else idfSurrogate
-    val tfw = (tfd * lit(2.2)) /
-      (tfd + lit(1.2) * (lit(0.25) + lit(0.75) * (col("dl").cast("double") / avgdl)))
-    matched
-      .join(broadcast(dfs), Seq("query_id", "term"))
-      .crossJoin(broadcast(tot)) // one row: N, sum_dl
-      .withColumn("contrib", idf * tfw)
-      .groupBy(col("query_id"), col("doc_id"), col("dl"))
-      .agg(
-        count(lit(1)).as("n_matched"),
-        array_sort(collect_list(struct(col("trank"), col("contrib")))).as("cs"))
-      .withColumn(
-        "score",
-        aggregate(col("cs"), lit(0.0), (acc, x) => acc + x.getField("contrib")))
-  }
-
   /** Index-free percolation of a document batch against standing
     * queries — the STREAMING side of `matchQueries`: a new doc should
     * match standing alerts the moment it arrives, before any index
@@ -1714,16 +1618,7 @@ object Postings {
       facetCols: Seq[String]): DataFrame = {
     require(terms.nonEmpty, "faceted search needs at least one term")
     require(facetCols.nonEmpty, "faceted search needs at least one facet column")
-    val spark = postings.sparkSession
-    import spark.implicits._
-    val termsDf = terms.distinct
-      .toDF("q_term")
-      .select(Hashing.hash60(col("q_term")).as("term_h"), col("q_term"))
-    val hits = postings
-      .filter(termHashPrune(terms.distinct))
-      .join(broadcast(termsDf), Seq("term_h"))
-      .filter(col("term") === col("q_term")) // 60-bit collision guard
-      .select(col("doc_id"))
+    val hits = termPostings(postings, terms).select(col("doc_id"))
     // ONE exchange for the whole decoration: key the slim hit set by
     // doc_id AT THE FORWARD TABLE'S BUCKET WIDTH, so the dedup
     // aggregate reuses that partitioning and the join reads the
@@ -1758,15 +1653,7 @@ object Postings {
   def facetCountsDenorm(postings: DataFrame, terms: Seq[String], facetCols: Seq[String]): DataFrame = {
     require(terms.nonEmpty, "faceted search needs at least one term")
     require(facetCols.nonEmpty, "faceted search needs at least one facet column")
-    val spark = postings.sparkSession
-    import spark.implicits._
-    val termsDf = terms.distinct
-      .toDF("q_term")
-      .select(Hashing.hash60(col("q_term")).as("term_h"), col("q_term"))
-    postings
-      .filter(termHashPrune(terms.distinct))
-      .join(broadcast(termsDf), Seq("term_h"))
-      .filter(col("term") === col("q_term")) // 60-bit collision guard
+    termPostings(postings, terms)
       .select(col("doc_id") +: facetCols.map(col): _*)
       .dropDuplicates("doc_id")
       .groupBy(facetCols.map(col): _*)
@@ -1916,15 +1803,7 @@ object Postings {
       window: Int,
       k: Int): DataFrame = {
     require(termA != termB, "proximity terms must differ (a==b would pair positions with themselves)")
-    val spark = posPostings.sparkSession
-    import spark.implicits._
-    val termsDf = Seq(termA, termB)
-      .toDF("q_term")
-      .select(Hashing.hash60(col("q_term")).as("term_h"), col("q_term"))
-    val matched = posPostings
-      .filter(termHashPrune(Seq(termA, termB)))
-      .join(broadcast(termsDf), Seq("term_h"))
-      .filter(col("term") === col("q_term")) // 60-bit collision guard
+    val matched = termPostings(posPostings, Seq(termA, termB))
       .select(col("doc_id"), col("term"), col("positions"))
     matched
       .groupBy(col("doc_id"))
@@ -1947,15 +1826,7 @@ object Postings {
 
   def phraseTopK(posPostings: DataFrame, phrase: Seq[String], k: Int): DataFrame = {
     require(phrase.nonEmpty, "phrase must have at least one term")
-    val spark = posPostings.sparkSession
-    import spark.implicits._
-    val termsDf = phrase.distinct
-      .toDF("q_term")
-      .select(Hashing.hash60(col("q_term")).as("term_h"), col("q_term"))
-    val matched = posPostings
-      .filter(termHashPrune(phrase.distinct))
-      .join(broadcast(termsDf), Seq("term_h"))
-      .filter(col("term") === col("q_term")) // 60-bit collision guard
+    val matched = termPostings(posPostings, phrase)
       .select(col("doc_id"), col("term"), col("positions"))
     val pmap = matched
       .groupBy(col("doc_id"))
@@ -1988,15 +1859,8 @@ object Postings {
     */
   def booleanSearch(postings: DataFrame, must: Seq[String], mustNot: Seq[String]): DataFrame = {
     require(must.nonEmpty, "boolean search needs at least one must-term")
-    val spark = postings.sparkSession
-    import spark.implicits._
-    def termsDf(ts: Seq[String]) =
-      ts.toDF("q_term").select(Hashing.hash60(col("q_term")).as("term_h"), col("q_term"))
     val mTerms = must.distinct
-    val hasAll = postings
-      .filter(termHashPrune(mTerms))
-      .join(broadcast(termsDf(mTerms)), Seq("term_h"))
-      .filter(col("term") === col("q_term")) // 60-bit collision guard
+    val hasAll = termPostings(postings, mTerms)
       .groupBy(col("doc_id"), col("dl"))
       .agg(count(lit(1)).as("n_terms"))
       .filter(col("n_terms") === mTerms.size)
@@ -2004,29 +1868,28 @@ object Postings {
     val out =
       if (mustNot.isEmpty) hasAll
       else {
-        val excluded = postings
-          .filter(termHashPrune(mustNot.distinct))
-          .join(broadcast(termsDf(mustNot.distinct)), Seq("term_h"))
-          .filter(col("term") === col("q_term"))
-          .select(col("doc_id"))
+        val excluded = termPostings(postings, mustNot).select(col("doc_id"))
         hasAll.join(excluded, Seq("doc_id"), "left_anti")
       }
     out.orderBy(col("doc_id"))
   }
 
+  // ---------- BM25 ranked retrieval ----------
+  // Every public form is a projection of ONE scoring core, `bm25Core`
+  // (a single query is the one-query batch query_id = 0): a raw or
+  // grid-rounded rank key, an optional keyset cursor, a top-k cut.
+
   /** Ad-hoc ranked retrieval over the persisted index: top-`k` docs
     * (among docs matching >= 1 term) for an ARBITRARY terms list, by
     * the same BM25-style score as d45.
     *
-    * Plan shape: the terms frame (broadcast-sized by construction)
-    * hash-joins the postings on `term_h` — with the bucketed layout the
-    * index side never exchanges even when broadcast is off (SMJ reads
-    * the buckets co-partitioned; RetrievalSpec plan assert). Everything
-    * downstream of the join touches ONLY the queried terms' postings:
-    * df is a count over them, the corpus stats total is an O(#batches)
-    * broadcast row, per-doc scores group matched postings by doc, and
-    * the top-k is a TakeOrderedAndProject — the full corpus is never
-    * rescanned.
+    * Plan shape (the core's, see `bm25Core`): one pruned scan of the
+    * queried terms' buckets joins the broadcast terms relation hash-
+    * keyed with zero index-side exchange (RetrievalSpec plan assert);
+    * df is a window count over that same bucketed scan, the corpus
+    * totals ride the broadcast terms rows, per-doc scores group the
+    * matched postings by doc (the only shuffle), and the top-k is a
+    * TakeOrderedAndProject — the full corpus is never rescanned.
     *
     * Bit-exactness: contributions fold in query-term-rank order from an
     * exact 0.0 (rank-sorted `aggregate`), which is the same IEEE tree
@@ -2034,9 +1897,7 @@ object Postings {
     * contribution there is exact 0.0 and `x + 0.0 == x`.
     */
   def bm25TopK(postings: DataFrame, stats: DataFrame, terms: Seq[String], k: Int): DataFrame =
-    bm25Scored(postings, stats, terms)
-      .orderBy(col("score").desc, col("doc_id"))
-      .limit(k)
+    topK(bm25Scored(postings, stats, terms), k)
 
   /** Keyset (search-after) pagination over ranked results: the page
     * AFTER cursor `(afterScore, afterDoc)` — the last row of the
@@ -2055,12 +1916,7 @@ object Postings {
       k: Int,
       afterScore: Double,
       afterDoc: Long): DataFrame =
-    bm25Scored(postings, stats, terms)
-      .filter(
-        col("score") < afterScore ||
-          (col("score") === afterScore && col("doc_id") > afterDoc))
-      .orderBy(col("score").desc, col("doc_id"))
-      .limit(k)
+    topK(bm25Scored(postings, stats, terms), k, after = Some((afterScore, afterDoc)))
 
   /** CLASSIC (Lucene-style) BM25 scoring mode — opt-in alternative to
     * the log-free idf surrogate: idf = ln(1 + (N − df + 0.5)/(df + 0.5))
@@ -2069,8 +1925,7 @@ object Postings {
     * of df) and bit-exact against any SQL engine, but its multi-term
     * SUM weighs terms differently than the ln form — a user coming
     * from a Lucene-class engine expects these orderings. Plan shape is
-    * identical to `bm25TopK` (same pruned scan, same broadcast joins,
-    * same rank-sorted fold); only the idf factor changes.
+    * identical to `bm25TopK`; only the idf factor changes.
     *
     * Oracle note (measured, round 13): JVM `Math.log` and DuckDB/glibc
     * `ln` are each correctly-rounded-to-~1ulp but NOT bit-identical —
@@ -2090,11 +1945,7 @@ object Postings {
     */
   def bm25AllClassic(postings: DataFrame, stats: DataFrame, terms: Seq[String]): DataFrame =
     bm25Scored(postings, stats, terms, classicIdf = true)
-      .select(
-        col("doc_id"),
-        col("dl"),
-        col("n_matched"),
-        round(col("score"), 5).as("score_r"))
+      .select(col("doc_id"), col("dl"), col("n_matched"), gridScore.as("score_r"))
       .orderBy(col("doc_id"))
 
   /** Raw-score classic frame (unrounded) — what the d65 gate's grid
@@ -2107,9 +1958,7 @@ object Postings {
     * agreement vs the surrogate is reported in RetrievalSpec).
     */
   def bm25TopKClassic(postings: DataFrame, stats: DataFrame, terms: Seq[String], k: Int): DataFrame =
-    bm25Scored(postings, stats, terms, classicIdf = true)
-      .orderBy(col("score").desc, col("doc_id"))
-      .limit(k)
+    topK(bm25Scored(postings, stats, terms, classicIdf = true), k)
 
   /** Classic-mode top-k ranked ON THE ROUNDED GRID — how the epsilon-
     * oracle technique composes with rank cuts (VERDICT r13 #5): a raw
@@ -2131,11 +1980,7 @@ object Postings {
       stats: DataFrame,
       terms: Seq[String],
       k: Int): DataFrame =
-    bm25Scored(postings, stats, terms, classicIdf = true)
-      .withColumn("score_r", round(col("score"), 5))
-      .orderBy(col("score_r").desc, col("doc_id"))
-      .limit(k)
-      .select(col("doc_id"), col("dl"), col("n_matched"), col("score_r"))
+    topK(bm25Scored(postings, stats, terms, classicIdf = true), k, rounded = true)
 
   /** Keyset (search-after) page of the rounded-grid classic ranking:
     * the page after cursor `(afterScoreR, afterDoc)` — the classic-
@@ -2151,40 +1996,147 @@ object Postings {
       k: Int,
       afterScoreR: Double,
       afterDoc: Long): DataFrame =
-    bm25Scored(postings, stats, terms, classicIdf = true)
-      .withColumn("score_r", round(col("score"), 5))
-      .filter(
-        col("score_r") < afterScoreR ||
-          (col("score_r") === afterScoreR && col("doc_id") > afterDoc))
-      .orderBy(col("score_r").desc, col("doc_id"))
-      .limit(k)
-      .select(col("doc_id"), col("dl"), col("n_matched"), col("score_r"))
+    topK(bm25Scored(postings, stats, terms, classicIdf = true), k,
+      rounded = true, after = Some((afterScoreR, afterDoc)))
 
+  /** SCORED multi-query retrieval: per-query BM25 top-`k` for MANY
+    * standing queries in ONE pass over the posting index — the ranked
+    * form of `matchQueries` (alerts that want their best hits, not
+    * just membership). It is the core itself over the whole batch: one
+    * pruned scan of the union of standing terms, one shuffle keyed
+    * (query_id, doc_id) for the score fold, then a per-query window
+    * over the already-aggregated frame (bounded by matches, never the
+    * corpus). Each (query, term) pairing joins the term's identical
+    * posting set, so its df is the term's live posting count and every
+    * score equals `bm25TopK`'s for that query, bit for bit.
+    */
+  def bm25MultiTopK(
+      postings: DataFrame,
+      stats: DataFrame,
+      queries: Seq[(Long, Seq[String])],
+      k: Int): DataFrame =
+    topK(bm25MultiScored(postings, stats, queries), k)
+
+  /** Raw classic-mode multi-query scores (the frame d69's margin
+    * guard reads — one row per (query, matching doc)).
+    */
+  def bm25MultiScoredClassic(
+      postings: DataFrame,
+      stats: DataFrame,
+      queries: Seq[(Long, Seq[String])]): DataFrame =
+    bm25MultiScored(postings, stats, queries, classicIdf = true)
+
+  /** CLASSIC-mode ranked multi-query retrieval ON THE ROUNDED GRID —
+    * the per-query-rank-cut composition of the d65 epsilon-oracle
+    * technique (the keyset composition is `bm25TopKClassicAfter`):
+    * each standing query's top-k is ranked by `(score_r DESC,
+    * doc_id)` where score_r is the 5-decimal round, so under the
+    * margin guard every per-query rank cut lands on the identical
+    * row set on any engine.
+    */
+  def bm25MultiTopKClassicRounded(
+      postings: DataFrame,
+      stats: DataFrame,
+      queries: Seq[(Long, Seq[String])],
+      k: Int): DataFrame =
+    topK(bm25MultiScored(postings, stats, queries, classicIdf = true), k, rounded = true)
+
+  /** The 5-decimal grid the classic forms rank and return on. */
+  private def gridScore: Column = round(col("score"), 5)
+
+  /** Top `k` of scored rows by `(key DESC, doc_id)`, `key` being the
+    * raw `score` or its grid round `score_r`, optionally strictly after
+    * a keyset cursor on that key. A frame with a `query_id` column is
+    * cut per query (row_number over the aggregated match frame) and
+    * ordered by query first; otherwise the cut is one
+    * TakeOrderedAndProject.
+    */
+  private def topK(
+      scored: DataFrame,
+      k: Int,
+      rounded: Boolean = false,
+      after: Option[(Double, Long)] = None): DataFrame = {
+    val key = if (rounded) "score_r" else "score"
+    val keyed = if (rounded) scored.withColumn(key, gridScore).drop("score") else scored
+    val paged = after.fold(keyed) { case (s, d) =>
+      keyed.filter(col(key) < s || (col(key) === s && col("doc_id") > d))
+    }
+    val order = Seq(col(key).desc, col("doc_id"))
+    if (!scored.columns.contains("query_id")) paged.orderBy(order: _*).limit(k)
+    else
+      paged
+        .withColumn("rk", row_number().over(Window.partitionBy(col("query_id")).orderBy(order: _*)))
+        .filter(col("rk") <= k)
+        .drop("rk")
+        .orderBy(col("query_id") +: order: _*)
+  }
+
+  /** One query's scored rows `(doc_id, dl, n_matched, score)`. */
   private def bm25Scored(
       postings: DataFrame,
       stats: DataFrame,
       terms: Seq[String],
+      classicIdf: Boolean = false): DataFrame =
+    bm25Core(postings, stats, Seq(0L -> terms), classicIdf).drop("query_id")
+
+  /** A standing-query batch's scored rows `(query_id, doc_id, dl,
+    * n_matched, score)`. */
+  private def bm25MultiScored(
+      postings: DataFrame,
+      stats: DataFrame,
+      queries: Seq[(Long, Seq[String])],
       classicIdf: Boolean = false): DataFrame = {
-    val spark = postings.sparkSession
-    import spark.implicits._
-    // dedupe (order-preserving): a duplicated query term would join the
-    // same posting twice — inflating n_matched and adding its
-    // contribution twice — which no full-scan formulation would do
-    val termsDf = terms.distinct.zipWithIndex
-      .toDF("q_term", "trank")
-      .select(Hashing.hash60(col("q_term")).as("term_h"), col("q_term"), col("trank"))
-    val tot = stats.agg(sum(col("n_docs")).as("n_docs"), sum(col("sum_dl")).as("sum_dl"))
-    val matched = postings
-      .filter(termHashPrune(terms.distinct))
-      .join(broadcast(termsDf), Seq("term_h"))
-      // 60-bit hash collision guard: the layout key is the hash, the
-      // semantic key is the term itself
-      .filter(col("term") === col("q_term"))
-      .select(col("term"), col("trank"), col("doc_id"), col("tf"), col("dl"))
-    // df(term) == posting count of that term (one posting per doc) —
-    // derived from the matched rows only, so it is exact after any
-    // append without persisted-stat maintenance
-    val dfs = matched.groupBy(col("term")).agg(count(lit(1)).as("df"))
+    require(queries.nonEmpty, "scored multi-query retrieval needs at least one standing query")
+    require(queries.forall(_._2.nonEmpty), "every standing query needs at least one term")
+    require(queries.map(_._1).distinct.size == queries.size, "standing query ids must be unique")
+    bm25Core(postings, stats, queries, classicIdf)
+  }
+
+  /** The BM25 scoring core: one pruned read of the queried postings,
+    * no exchange before the per-doc fold.
+    *
+    *   - The terms relation `(query_id, term_h, q_term, trank, n_docs,
+    *     sum_dl)` is broadcast. The corpus totals are summed from the
+    *     O(#batches) partial stats rows in ONE task (`coalesce(1)`, so
+    *     the aggregate needs no exchange) and exploded into one row per
+    *     (query, distinct term) — the totals ride every terms row
+    *     instead of a separate one-row broadcast and a cross join.
+    *   - The postings scan reads only the queried terms' buckets
+    *     (`termHashPrune`) and joins the terms hash-keyed on `term_h`,
+    *     so the index side keeps its `HashPartitioning(term_h)`.
+    *   - df(term) is the term's posting count (one posting per live
+    *     doc): a window count over (query_id, term_h, term), which that
+    *     partitioning already satisfies — no exchange. It adds no skew
+    *     either: the bucketed scan already reads all of a term's
+    *     postings in one task, and the window only sorts them there.
+    *     Counting the matched rows keeps df exact after any append or
+    *     delete without persisted-stat maintenance.
+    *   - Scores fold per (query_id, doc_id) from exact 0.0 in term-rank
+    *     order (rank-sorted `aggregate`) — the one shuffle.
+    *
+    * Duplicate terms drop order-preserving per query: a repeated term
+    * would join the same posting twice, which no full-scan form does.
+    */
+  private def bm25Core(
+      postings: DataFrame,
+      stats: DataFrame,
+      queries: Seq[(Long, Seq[String])],
+      classicIdf: Boolean): DataFrame = {
+    val qt = queries.flatMap { case (qid, ts) =>
+      ts.distinct.zipWithIndex.map { case (t, r) => (qid, t, r) }
+    }
+    val termsDf = stats
+      .coalesce(1)
+      .agg(sum(col("n_docs")).as("n_docs"), sum(col("sum_dl")).as("sum_dl"))
+      .select(col("n_docs"), col("sum_dl"), explode(typedLit(qt)).as("qt"))
+      .select(
+        col("qt._1").as("query_id"),
+        Hashing.hash60(col("qt._2")).as("term_h"),
+        col("qt._2").as("q_term"),
+        col("qt._3").as("trank"),
+        col("n_docs"),
+        col("sum_dl"))
+    val df    = count(lit(1)).over(Window.partitionBy(col("query_id"), col("term_h"), col("term")))
     val avgdl = col("sum_dl").cast("double") / col("n_docs").cast("double")
     val tfd   = col("tf").cast("double")
     val idfSurrogate = ((col("n_docs") - col("df")) + lit(0.5)) / (col("df") + lit(0.5))
@@ -2193,17 +2145,23 @@ object Postings {
     val idf = if (classicIdf) log(lit(1.0) + idfSurrogate) else idfSurrogate
     val tfw = (tfd * lit(2.2)) /
       (tfd + lit(1.2) * (lit(0.25) + lit(0.75) * (col("dl").cast("double") / avgdl)))
-    matched
-      .join(broadcast(dfs), Seq("term"))
-      .crossJoin(broadcast(tot)) // one row: N, sum_dl
+    postings
+      .filter(termHashPrune(qt.map(_._2).distinct))
+      .join(broadcast(termsDf), Seq("term_h"))
+      // 60-bit hash collision guard: the layout key is the hash, the
+      // semantic key is the term itself
+      .filter(col("term") === col("q_term"))
+      .withColumn("df", df)
       .withColumn("contrib", idf * tfw)
-      .groupBy(col("doc_id"), col("dl"))
+      .groupBy(col("query_id"), col("doc_id"), col("dl"))
       .agg(
         count(lit(1)).as("n_matched"),
         array_sort(collect_list(struct(col("trank"), col("contrib")))).as("cs"))
-      .withColumn(
-        "score",
-        aggregate(col("cs"), lit(0.0), (acc, x) => acc + x.getField("contrib")))
-      .select(col("doc_id"), col("dl"), col("n_matched"), col("score"))
+      .select(
+        col("query_id"),
+        col("doc_id"),
+        col("dl"),
+        col("n_matched"),
+        aggregate(col("cs"), lit(0.0), (acc, x) => acc + x.getField("contrib")).as("score"))
   }
 }

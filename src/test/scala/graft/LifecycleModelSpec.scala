@@ -307,4 +307,70 @@ class LifecycleModelSpec extends SparkTestBase {
       } finally Postings.dropIndex(spark, name)
     }
   }
+
+  test("random term lists over append/delete interleavings: bm25TopK and bm25MultiTopK == model, bit for bit") {
+    // The model is bruteTopK over the live docs with each query's terms
+    // deduped in order: df is the live posting count of the term and
+    // the contributions fold in term-rank order. Every check batch has
+    // a duplicated term, an absent term and a term shared by standing
+    // queries, drawn at random positions.
+    val corpus = spark.read.parquet(s"$sfDir/documents.parquet")
+      .filter(col("text").isNotNull).select(col("doc_id"), col("text"))
+      .as[(Long, String)].collect().sortBy(_._1).toVector
+    val pool = vocab ++ Seq("the", "a", "customer", "zzz_absent")
+    val rnd  = new scala.util.Random(11)
+    val name = "t_lcm_terms"
+    val dir  = Files.createTempDirectory("graft_lcm").toString
+    val live = scala.collection.mutable.Map[Long, String]()
+    var next = 0 // corpus rows [0, next) have been appended once
+
+    def draw(): String = pool(rnd.nextInt(pool.size))
+    def grow(n: Int): Seq[(Long, String)] = {
+      val batch = corpus.slice(next, next + n)
+      next += batch.size
+      live ++= batch
+      batch
+    }
+    def check(op: String): Unit = {
+      val shared  = draw()
+      val queries = Seq(
+        1L -> rnd.shuffle(Seq(shared, draw(), shared)),
+        2L -> rnd.shuffle(Seq(draw(), "qqq_absent", shared)),
+        3L -> Seq.fill(1 + rnd.nextInt(4))(draw()))
+      val docs = live.toSeq.sortBy(_._1)
+      val pt   = Postings.livePostings(spark, name)
+      val st   = Postings.statsTable(spark, name)
+      for ((qid, terms) <- queries.take(2)) {
+        val got = Postings.bm25TopK(pt, st, terms, 20).as[(Long, Long, Long, Double)].collect().toSeq
+        assert(got == bruteTopK(docs, terms.distinct, 20), s"after $op: query $qid $terms diverged")
+      }
+      val multi = Postings.bm25MultiTopK(pt, st, queries, 20)
+        .as[(Long, Long, Long, Long, Double)].collect().toSeq
+      val exp = queries.flatMap { case (qid, terms) =>
+        bruteTopK(docs, terms.distinct, 20).map { case (d, dl, n, sc) => (qid, d, dl, n, sc) }
+      }
+      assert(multi == exp, s"after $op: multi-query batch $queries diverged")
+    }
+
+    Postings.writeIndex(grow(40).toDF("doc_id", "text"), "doc_id", "text", name, dir, buckets = 4)
+    val ops = scala.collection.mutable.ArrayBuffer[String]()
+    try {
+      check("build")
+      for (step <- 1 to 5) {
+        if (rnd.nextBoolean()) {
+          Postings.appendBatch(grow(5 + rnd.nextInt(10)).toDF("doc_id", "text"), "doc_id", "text", name, step)
+          ops += "append"
+          check(s"append#$step")
+        } else {
+          val victims = rnd.shuffle(live.keys.toSeq.sorted).take(1 + rnd.nextInt(5))
+          Postings.deleteBatch(
+            victims.map(id => (id, live(id))).toDF("doc_id", "text"), "doc_id", "text", name, step)
+          live --= victims
+          ops += "delete"
+          check(s"delete#$step")
+        }
+      }
+      assert(ops.toSet == Set("append", "delete"), s"the seed must interleave both kinds: $ops")
+    } finally Postings.dropIndex(spark, name)
+  }
 }

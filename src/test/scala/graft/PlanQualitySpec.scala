@@ -37,37 +37,10 @@ class PlanQualitySpec extends SparkTestBase {
     // cosine arm (broadcast-one-query); the ranking window reads the
     // TakeOrdered 50-row frame, not the corpus
     "d46_hybrid_rrf"      -> Set("BroadcastNestedLoopJoin", "GlobalWindow(small)"),
-    // d47: the posting index's one-row corpus-stats total (sum of the
-    // O(#batches) partial rows) cross-joined back broadcast — the index
-    // scan itself joins the terms frame hash-keyed, zero index-side
-    // shuffle (RetrievalSpec plan assert)
-    "d47_indexed_search"  -> Set("BroadcastNestedLoopJoin"),
     // d48: d46's text arm (one-row stats broadcast) + the IVF arm's
     // broadcast-one-query-row crossJoin; both ranking windows read
     // TakeOrdered 50-row frames, not the corpus
     "d48_hybrid_rrf_ivf"  -> Set("BroadcastNestedLoopJoin", "GlobalWindow(small)"),
-    // d47p: same one-row stats broadcast as d47 (query-only prod form)
-    "d47p_indexed_prod"   -> Set("BroadcastNestedLoopJoin"),
-    // d53: dictionary-resolved terms drive the same bm25TopK shape
-    "d53_prefix_search"   -> Set("BroadcastNestedLoopJoin"),
-    // (d54 boolean search: pure hash joins + division — no exception needed)
-    // d55: the compaction gate re-runs d47's query over the compacted
-    // index — same one-row corpus-stats broadcast
-    "d55_index_compact"   -> Set("BroadcastNestedLoopJoin"),
-    // d56: stop-term screening feeds the kept terms into the same
-    // bm25TopK shape — same one-row corpus-stats broadcast
-    "d56_screened_search" -> Set("BroadcastNestedLoopJoin"),
-    // d58: dictionary-resolved fuzzy terms drive the same bm25TopK
-    // shape — same one-row corpus-stats broadcast
-    "d58_fuzzy_search"    -> Set("BroadcastNestedLoopJoin"),
-    // d61: the same one-row corpus-stats broadcast as every bm25 form
-    "d61_multiquery_ranked" -> Set("BroadcastNestedLoopJoin"),
-    // d63: the returned page-2 frame is d47's plan (one-row stats
-    // broadcast) plus the keyset cursor filter
-    "d63_search_after"      -> Set("BroadcastNestedLoopJoin"),
-    // (d62 snippets: the sweep sees only the RETURNED frame — the
-    // k-bounded pushed-IN point fetch + slice; the ranking stage ran
-    // eagerly to collect the 10 ids and is d47's allowlisted plan)
     // d60: the pinned keyed repartition IS the mechanism — the slim
     // hit set must land exactly at the forward table's bucket width
     // so the corpus-sized forward side joins co-partitioned with no
@@ -75,55 +48,18 @@ class PlanQualitySpec extends SparkTestBase {
     // planner shuffles the FORWARD side and drops its bucketed scan).
     // AQE loses nothing: a bucketed join is outside its re-plan scope.
     "d60_faceted_search"  -> Set("PinnedKeyedRepartition"),
-    // d50: bm25TopK's one-row corpus-stats total (same shape as d47);
-    // the grown (built+appended) index still joins terms hash-keyed
-    "d50_index_append"    -> Set("BroadcastNestedLoopJoin"),
-    // d64: same one-row stats broadcast; the tombstone filter itself is
-    // a broadcast HASH anti-join (no flag) above the bucketed scan
-    "d64_index_delete"    -> Set("BroadcastNestedLoopJoin"),
-    // d65: classic-idf mode of the same plan — one-row stats broadcast
-    "d65_classic_bm25"    -> Set("BroadcastNestedLoopJoin"),
-    // d64p: the pre-deleted prod read is d64's query plan (one-row
-    // stats broadcast above the tombstone anti-join)
-    "d64p_delete_prod"    -> Set("BroadcastNestedLoopJoin"),
-    // d68: classic-mode keyset page — d63's plan shape with the
-    // rounded-grid cursor filter, same one-row stats broadcast
-    "d68_classic_after"   -> Set("BroadcastNestedLoopJoin"),
-    // d69: classic mode of d61's plan — same one-row stats broadcast;
-    // the per-query window reads the aggregated match frame, not RAW
-    "d69_classic_multiquery" -> Set("BroadcastNestedLoopJoin"),
-    // d70: the post-bucket-compaction read is d64's bm25TopK plan —
-    // same one-row corpus-stats broadcast (the bucket-scoped rewrite
-    // happens eagerly in the builder, not in the returned plan)
-    "d70_bucket_compact" -> Set("BroadcastNestedLoopJoin"),
-    // (d71 returns the forward-table facet agg over a pushed IN — the
-    // classic ranking and margin guard run eagerly in the builder, so
-    // the returned plan is clean and needs no exception)
     // e12: the post-retrain read is the pruned ivfTopK plan — the same
     // broadcast K-row centroid-model cross join as e10/e11
     "e12_ivf_retrain" -> Set("BroadcastNestedLoopJoin"),
-    // d73: the post-retirement read is d64's bm25TopK plan (one-row
-    // stats broadcast); the cleared tombstone set means no anti-join —
-    // retirement itself ran eagerly in the builder
-    // (d72 snippets: like d62, the returned frame is the k-bounded
-    // pushed-IN point fetch — the classic ranking and margin guard ran
-    // eagerly in the builder, so the plan is clean)
-    "d73_tombstone_retire" -> Set("BroadcastNestedLoopJoin"),
     // e13: the post-retirement read is the pruned ivfTopK plan — the
     // same broadcast K-row centroid-model cross join as e10/e11/e12
     "e13_ivf_retire" -> Set("BroadcastNestedLoopJoin"),
-    // d75: the post-migration read is d64's bm25TopK plan (one-row
-    // stats broadcast) — the 16→64 rebucket itself ran eagerly in the
-    // builder; the cleared tombstone set means no anti-join
-    "d75_rebucket" -> Set("BroadcastNestedLoopJoin"),
     // e14: the post-migration read is the pruned ivfTopK plan — the
     // same broadcast K-row centroid-model cross join as e10-e13
     "e14_ivf_rebucket" -> Set("BroadcastNestedLoopJoin"),
-    // d76/e15 (r17): the POLICY-triggered migrations read exactly like
-    // their explicit twins d75/e14 — same one-row-stats / K-row-
-    // centroid broadcast frames; the rebucketIfOvergrown call ran
-    // eagerly in the builder
-    "d76_rebucket_policy" -> Set("BroadcastNestedLoopJoin"),
+    // e15 (r17): the POLICY-triggered migration reads exactly like its
+    // explicit twin e14 — the same K-row centroid broadcast frame; the
+    // rebucketIfOvergrown call ran eagerly in the builder
     "e15_ivf_rebucket_policy" -> Set("BroadcastNestedLoopJoin"),
     // e11p: the pre-deleted prod read is e11's pruned ivfTopK plan
     // (broadcast K-row centroid-model cross join for the query batch)
